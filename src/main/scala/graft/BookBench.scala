@@ -2,7 +2,6 @@ package graft
 
 import graft.ml._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** The reference's own training workload (BASELINE.md): EM-LDA, k=5,
   * 50 iterations, English Gutenberg corpus (51 books / 29 MB), run
@@ -25,8 +24,8 @@ object BookBench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // EM's PeriodicGraphCheckpointer is a NO-OP without a checkpoint
-    // dir: the GraphX lineage then grows across all 50 iterations and
+    // EM checkpointing is a NO-OP without a checkpoint dir: the EM
+    // state's lineage then grows across all 50 iterations and
     // every task binary re-serializes a deeper DAG — the measured
     // 0.4→1.3 s/iter monotone creep in both r16 judge runs (r16 verdict
     // #3). With a dir set, checkpointInterval=10 (the default, and the
@@ -39,38 +38,21 @@ object BookBench {
     val docs = Pipeline.withDocIds(CorpusReader.readBooks(spark, books))
     val tokens = Pipeline.prepTokens(docs, stops).cache()
     val nDocs = tokens.count() // materialize prep
-    val counts = Vectorize.wordCounts(tokens)
-    val vocab = Vectorize.buildVocab(counts, 2900000)
-    val tf = Vectorize.countVectors(tokens, vocab)
-    val idf = Vectorize.fitIdf(tf).idf.toArray
-    val corpus = Vectorize.tfidfWithFloor(spark, tf, idf).coalesce(8).cache()
-    corpus.count()
     val tPrep = (System.nanoTime() - t0) / 1e9
 
-    // mllib EM directly (the reference's own API, LDAClustering.scala:9)
-    // rather than the ml wrapper: identical optimizer, and the
-    // DistributedLDAModel exposes iterationTimes — the exact metric the
-    // reference's metadata (and BASELINE.md) reports.
-    val rdd = corpus.select("doc_id", "features").rdd.map { r =>
-      (r.getLong(0), org.apache.spark.mllib.linalg.Vectors.fromML(
-        r.getAs[org.apache.spark.ml.linalg.Vector](1)))
-    }.cache()
-    rdd.count()
+    // the shipped training path with the reference's Params (EM, k=5,
+    // 50 iterations, seed 42): train_sec covers vectorization and the
+    // fit; iter_sum_sec is the sum of the model's iterationTimes, the
+    // exact metric the reference's metadata (and BASELINE.md) reports
     val t1 = System.nanoTime()
-    val lda = new org.apache.spark.mllib.clustering.LDA()
-      .setK(5).setMaxIterations(50)
-      .setOptimizer(new org.apache.spark.mllib.clustering.EMLDAOptimizer)
-      .setSeed(42L)
-    val model = lda.run(rdd)
-      .asInstanceOf[org.apache.spark.mllib.clustering.DistributedLDAModel]
+    val fitted = LdaPipeline.train(spark, tokens, LdaPipeline.Params())
     val tTrain = (System.nanoTime() - t1) / 1e9
-    val iters =
-      org.apache.spark.mllib.clustering.GraftLdaBridge.iterationTimes(model)
+    val iters = LdaPipeline.emIterationTimes(fitted).getOrElse(Seq.empty)
     val itersStr = iters.map(t => f"$t%.3f").mkString("[", ",", "]")
 
     val lang = if (books.contains("German")) "ge" else "en"
     val baseline = if (lang == "ge") 105.2 else 40.8
-    println(f"""{"workload":"${lang}_books_em_lda","docs":$nDocs,"vocab":${vocab.length},"preprocess_sec":$tPrep%.1f,"train_sec":$tTrain%.1f,"iter_sum_sec":${iters.sum}%.1f,"iter_times_sec":$itersStr,"baseline_train_sec":$baseline}""")
+    println(f"""{"workload":"${lang}_books_em_lda","docs":$nDocs,"vocab":${fitted.vocab.length},"preprocess_sec":$tPrep%.1f,"train_sec":$tTrain%.1f,"iter_sum_sec":${iters.sum}%.1f,"iter_times_sec":$itersStr,"baseline_train_sec":$baseline}""")
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.ml
 
-import org.apache.spark.ml.clustering.{DistributedLDAModel, LDA, LDAModel, LocalLDAModel}
+import org.apache.spark.ml.clustering.{DistributedLDAModel, GraftMlLdaBridge, LDA, LDAModel, LocalLDAModel}
+import org.apache.spark.mllib.clustering.GraftLdaBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,8 +20,11 @@ import org.apache.spark.sql.functions._
   *  - a seed is always pinned (the reference never set one — SURVEY.md
   *    §7 risk 2 — which made its runs irreproducible; we fix that).
   *
-  * Scale: EM builds a GraphX doc-term graph (memory ∝ corpus nonzeros —
-  * the known ceiling); online is the 100 TB path (minibatched variational
+  * Scale: EM iterates on doc-partitioned blocks ([[EmLda]]: memory ∝
+  * corpus nonzeros on the executors plus one W×k term-topic matrix on
+  * the driver, bounded by the broadcast vocabulary cap) and builds the
+  * GraphX doc-term graph of mllib's model once, after the last
+  * iteration; online is the 100 TB path (minibatched variational
   * updates, corpus never fully materialized per iteration). The loader-
   * side inference is cluster-wide `model.transform`, not the reference's
   * per-book driver loop (SURVEY.md §3.2 boundary note).
@@ -40,24 +44,23 @@ object LdaPipeline {
   final case class Fitted(
       model: LDAModel, vocab: Array[String], idf: Array[Double],
       corpus: DataFrame) {
-    /** Drop the cached TF·IDF corpus. Call when done with a model in a
+    /** Drop what training left cached: the TF·IDF corpus and, for an EM
+      * model, its doc-term graph. Call when done with a model in a
       * long-lived session (e.g. training all 8 language corpora) so
-      * cached matrices don't accumulate in storage memory. */
-    def release(): Unit = corpus.unpersist()
+      * cached matrices don't accumulate in storage memory. The model
+      * stays usable; a later call recomputes what it needs. */
+    def release(): Unit = {
+      model match {
+        case m: DistributedLDAModel => GraftLdaBridge.unpersistGraph(GraftMlLdaBridge.unwrap(m))
+        case _ =>
+      }
+      corpus.unpersist()
+    }
   }
 
   /** Full train: tokens DataFrame(doc_id, tokens) → fitted LDA + vocab.
     * Mirrors SURVEY.md §3.3's dataflow with Catalyst-planned stages. */
-  def train(spark: SparkSession, tokens: DataFrame, params: Params): Fitted =
-    trainWithPartitions(spark, tokens, params, None)
-
-  /** [[train]] with an explicit corpus partition-count override — the
-    * knob graft.tools.ProbeEmParts sweeps so the small-corpus coalesce
-    * rule below is a measured curve, not one point. Production callers
-    * use [[train]] (override None). */
-  private[graft] def trainWithPartitions(
-      spark: SparkSession, tokens: DataFrame, params: Params,
-      partitionOverride: Option[Int]): Fitted = {
+  def train(spark: SparkSession, tokens: DataFrame, params: Params): Fitted = {
     // widened (guide §2.5): the TF·IDF prep (explode + count partial
     // aggs, count-vector build) otherwise fuses into the corpus scan
     // task — one task for a single-row-group corpus file. Counts and
@@ -70,11 +73,12 @@ object LdaPipeline {
     val tf = Vectorize.countVectors(nonEmpty, vocab)
     val corpusSize = tf.count()
     val idf = Vectorize.fitIdf(tf).idf.toArray
-    // partition count tracks corpus size: EM-LDA runs one GraphX round
-    // per iteration, and over-partitioning a small corpus turns the
+    // partition count tracks corpus size: EM-LDA runs one stage per
+    // iteration, and over-partitioning a small corpus turns the
     // training into pure scheduler overhead (measured 123 s → 74 s on
-    // the reference EN corpus going 32 → 8 partitions). At real scale
-    // the default parallelism stands.
+    // the reference EN corpus going 32 → 8 partitions, when each
+    // iteration ran four GraphX stages). At real scale the default
+    // parallelism stands.
     val scaled = Vectorize.tfidfWithFloor(spark, tf, idf)
     val online = params.algorithm.equalsIgnoreCase("online")
     // ONLINE partitioning tracks the MINIBATCH, not the corpus (r19,
@@ -82,7 +86,7 @@ object LdaPipeline {
     // ~2-3 jobs/iteration aggregates only the sampled minibatch
     // (≈ subsamplingRate × corpus ≈ 0.05·N docs), so per-job task
     // count is fixed cost multiplied by ~3×maxIter. Measured curve
-    // (ProbeOnlineParts): 5k docs (≈250-doc minibatch) runs best at
+    // (r19 partition sweep): 5k docs (≈250-doc minibatch) runs best at
     // 1 partition (8.9 → 6.0 s warm vs 8), 50k docs (≈2.5k minibatch)
     // at 8 (19.8 s at 2 parts — compute-bound — vs 11.3 at 8); ≈300
     // minibatch docs per task sits on both optima. Corpora ≥100k keep
@@ -91,20 +95,19 @@ object LdaPipeline {
     val onlineParts =
       math.max(1L, math.min(corpusSize,
         math.ceil((0.05 * corpusSize + 1.0) / 300.0).toLong)).toInt
-    val corpus = (partitionOverride match {
-      case Some(p) => scaled.coalesce(p)
-      case None if corpusSize < 100000 =>
-        scaled.coalesce(if (online) onlineParts else 8)
-      case None => scaled
-    }).cache()
+    val corpus =
+      (if (corpusSize < 100000) scaled.coalesce(if (online) onlineParts else 8)
+       else scaled).cache()
 
     // Checkpoint storage cost (r17 verdict #3): with a checkpoint dir
     // set (Bench/Verify/BookBench do — without one the interval is a
-    // silent no-op, r16 verdict #3), EM writes the FULL doc-term graph
-    // to the dir every `checkpointInterval` (10) iterations; ~5 copies
-    // of the corpus graph per 50-iter fit. The runner mains register
-    // the dir for deletion at JVM exit (TempDirs.deleteOnExit); a
-    // production cluster should point it at scratch storage and clean
+    // silent no-op, r16 verdict #3), EM writes its doc-side block state
+    // (the corpus in CSR form plus the doc-topic counts) to the dir every
+    // `checkpointInterval` (10) iterations and deletes the superseded
+    // copy; the last one stays, since the model's lineage reads it
+    // (`deleteCheckpointFiles` on the model drops it). The runner mains
+    // register the dir for deletion at JVM exit (TempDirs.deleteOnExit);
+    // a production cluster should point it at scratch storage and clean
     // per job for the same reason.
     val lda = new LDA()
       .setK(params.k)
@@ -132,7 +135,7 @@ object LdaPipeline {
       val (model, times) = jobTimes(spark)(lda.fit(corpus))
       lastOnlineFitJobTimes = Some(times)
       Fitted(model, vocab, idf, corpus)
-    } else Fitted(lda.fit(corpus), vocab, idf, corpus)
+    } else Fitted(EmLda.fit(lda, corpus), vocab, idf, corpus)
   }
 
   /** Per-job wall times of the most recent ONLINE fit (seconds, job
@@ -177,25 +180,15 @@ object LdaPipeline {
     (r, durs.toSeq.sortBy(_._1).map(_._2))
   }
 
-  /** Per-iteration EM training times (seconds) as recorded by the mllib
-    * optimizer inside the fitted model — the decomposition that lets a
-    * slow ml04 wall time be attributed to iterations × per-iteration
-    * cost (a real plan regression) vs a loaded environment (uniform
-    * inflation across iterations). Only the EM optimizer records these;
-    * online fits return None. The mllib `iterationTimes` accessor is
-    * public but reachable only through the ml wrapper's public
-    * name-mangled bridge method — hence the reflective call (no
-    * setAccessible, no private API crossed). */
+  /** Per-iteration EM training times (seconds) as recorded in the fitted
+    * model (mllib's `iterationTimes`, which [[EmLda]] fills with the
+    * same definition) — the decomposition that lets a slow ml04 wall
+    * time be attributed to iterations × per-iteration cost (a real plan
+    * regression) vs a loaded environment (uniform inflation across
+    * iterations). Only EM models carry these; online fits return None. */
   def emIterationTimes(fitted: Fitted): Option[Seq[Double]] = fitted.model match {
     case m: DistributedLDAModel =>
-      try {
-        val bridge = m.getClass.getMethod(
-          "org$apache$spark$ml$clustering$DistributedLDAModel$$oldDistributedModel")
-        val old = bridge.invoke(m)
-        val times = old.getClass.getMethod("iterationTimes")
-          .invoke(old).asInstanceOf[Array[Double]]
-        Some(times.toIndexedSeq)
-      } catch { case _: ReflectiveOperationException => None }
+      Some(GraftLdaBridge.iterationTimes(GraftMlLdaBridge.unwrap(m)).toIndexedSeq)
     case _ => None
   }
 
