@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -153,7 +154,7 @@ object Bench {
     try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")),
       java.nio.charset.StandardCharsets.UTF_8).split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** Cumulative steal jiffies from /proc/stat's aggregate cpu line
     * (field 8), or -1 when absent. Steal is the direct signature of a
@@ -166,47 +167,31 @@ object Bench {
         .map(_.trim.split("\\s+")).filter(_.length > 8).map(_(8).toLong)
         .getOrElse(-1L)
       finally src.close()
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
+
+  /** Run one query's action for Bench or Verify. An ordinary failure is
+    * printed as `[tag] name verb: message` and returns false, so the
+    * caller records it and moves on; a fatal JVM error (OOM, stack
+    * overflow) propagates, since timing on in a damaged JVM would only
+    * record garbage. */
+  private[graft] def guarded(tag: String, name: String, verb: String)(
+      action: => Unit): Boolean =
+    try { action; true }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[$tag] $name $verb: ${e.getMessage}")
+      false
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // scan-split parallelism (r18, guide §2.2/§6.1): the default
-      // openCostInBytes=4m FLOORS the split size at 4 MB, so a
-      // single-file sf fixture scans with ≤3 tasks on a 32-core box
-      // and every scan-bound stage runs ~10× under-parallel (measured:
-      // q01 −18%, gr01 −41% with 64k). With a small open cost the
-      // split size falls back to totalBytes/defaultParallelism — scan
-      // parallelism TRACKS the core count (scale-adaptive, §2.5). At
-      // cluster scale bytesPerCore ≫ maxPartitionBytes, so the 128 MB
-      // cap governs and this knob is inert; for many-tiny-files
-      // ingest layouts raise it back via the env override.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "65536"))
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // ml04's EM checkpointInterval=10 only truncates the EM state's
-    // lineage when a checkpoint dir exists (r16 verdict #3 — without one
-    // checkpointing silently no-ops and per-iteration time creeps with
-    // the growing task binary); dir deleted at JVM exit (r17 verdict #3
-    // — EM writes a checkpoint every 10 iters and each fit keeps its
-    // last one)
-    spark.sparkContext.setCheckpointDir(TempDirs.deleteOnExit("graft_ckpt"))
     // untimed warmup: JIT + codegen + parquet reader init otherwise land
     // entirely on whichever query runs first (measured ~4 s on dd01)
     try {
       spark.range(100000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/region.parquet").count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     var failures = List.empty[String]
     // deterministic name order: shared builds (shingle index, jaccard
     // pairs, LDA/KMeans fits) are then attributed to the FIRST query of
@@ -243,7 +228,7 @@ object Bench {
       try {
         operators.Similarity.regDot(spark)
         operators.Similarity.standingIvfpqIndex(spark, sfDir).count()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] index warmup failed: ${e.getMessage}")
       }
     }
@@ -265,11 +250,10 @@ object Bench {
       // noop write materializes every output row (projections, sorts,
       // UDFs) without side effects; a bare count() would let Catalyst
       // prune all projection work and time only the scan
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        if (!failures.contains(name)) failures ::= name
+      val ok = guarded("bench", name, "FAILED") {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
+      if (!ok && !failures.contains(name)) failures ::= name
       (System.nanoTime() - t0) / 1e9
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
@@ -283,10 +267,7 @@ object Bench {
     // each heavy query; when a heavy first run exceeds 1.5× its pinned
     // value it gets ONE retry and reports the min, under a separate
     // budget so heavy retries never starve the cheap-query repeat pool.
-    val (expected: Map[String, Double], pinDir: String) = try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("BENCH_EXPECT.json")),
-        java.nio.charset.StandardCharsets.UTF_8)
+    def parsePins(txt: String): (Map[String, Double], String) = {
       val pins = "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
       // the dir the pins were calibrated at (stamped by
@@ -295,7 +276,13 @@ object Bench {
       val dir = "\"_pin_dir\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
         .map(_.group(1)).getOrElse("/root/testdata/sf0.1")
       (pins, dir)
-    } catch { case _: Throwable => (Map.empty[String, Double], "/root/testdata/sf0.1") }
+    }
+    // an unreadable or malformed pin file leaves no pins
+    val (expected: Map[String, Double], pinDir: String) =
+      try parsePins(new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("BENCH_EXPECT.json")),
+        java.nio.charset.StandardCharsets.UTF_8))
+      catch { case NonFatal(_) => parsePins("") }
     // scale-aware guard (r14 verdict #2): pin-based spike retries apply
     // only at the pins' own calibration dir — at a ≥10× audit scale
     // every heavy first run exceeds its sf0.1 pin BY CONSTRUCTION, and
@@ -305,7 +292,7 @@ object Bench {
     // silently flip the comparison.
     def normPath(p: String): String =
       try java.nio.file.Paths.get(p).toRealPath().toString
-      catch { case _: Throwable => java.nio.file.Paths.get(p).normalize().toString }
+      catch { case NonFatal(_) => java.nio.file.Paths.get(p).normalize().toString }
     val sfDirNorm = normPath(sfDir)
     val pinsActive = sfDirNorm == normPath(pinDir)
     if (!pinsActive)
@@ -622,7 +609,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_LOCAL.json"),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     println(s"BENCH_JSON: $line")
     println(line)
     // The driver keeps only a bounded TAIL of stdout; the full line above

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ml._
-import org.apache.spark.sql.SparkSession
 
 /** The reference's own training workload (BASELINE.md): EM-LDA, k=5,
   * 50 iterations, English Gutenberg corpus (51 books / 29 MB), run
@@ -10,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * `iterationTimes` (training only; its CoreNLP preprocessing is
   * outside that number).
   *
-  * Usage: runMain graft.BookBench [booksDir] [stopwordsFile]
+  * Usage: runMain graft.BookBench [booksDir] [stopwordsFile]; the
+  * BASELINE.md protocol runs it with SPARK_GRAFT_CPUS=32.
   */
 object BookBench {
   def main(args: Array[String]): Unit = {
@@ -18,20 +18,8 @@ object BookBench {
       "/root/reference/TextClustering/src/main/resources/books/English")
     val stopFile = if (args.length > 1) args(1)
       else "/root/reference/TextClustering/src/main/resources/stopWords_EN.txt"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // EM checkpointing is a NO-OP without a checkpoint dir: the EM
-    // state's lineage then grows across all 50 iterations and
-    // every task binary re-serializes a deeper DAG — the measured
-    // 0.4→1.3 s/iter monotone creep in both r16 judge runs (r16 verdict
-    // #3). With a dir set, checkpointInterval=10 (the default, and the
-    // reference's LDAClustering setting) truncates for real. Dir
-    // deleted at JVM exit (r17 verdict #3).
-    spark.sparkContext.setCheckpointDir(TempDirs.deleteOnExit("graft_ckpt"))
 
     val stops = CorpusReader.readStopwords(spark, stopFile)
     val t0 = System.nanoTime()

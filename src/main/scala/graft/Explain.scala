@@ -1,13 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Plan auditor: prints the formatted physical plan of selected queries
   * so scan pushdown (PushedFilters/ReadSchema), join strategies
   * (BroadcastHashJoin vs SortMergeJoin), and WholeStageCodegen coverage
   * can be reviewed. Usage: runMain graft.Explain [sfDir] [name...]
+  *
+  * `sp11` and `sp12` name the queries' factored admission-chain frames,
+  * whose physical shape the specs lock but whose query-level explain
+  * hides (the GlobalCumsum localCheckpoints truncate the visible plan to
+  * the packing tail).
   */
 object Explain {
+  private val admissionFrames: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "sp11" -> operators.Curation.admittedCuration,
+    "sp12" -> multimodal.Multimodal.multimodalAdmitted)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq
@@ -23,23 +32,15 @@ object Explain {
         // round-trip, window-free terciles
         "q69_bloom_runtime_filter", "q70_zorder_clustering",
         "ta14_quality_buckets")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench/Verify's scan-split sizing so audited plans are
-      // the shipped plans (r18)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "65536"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
-      println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val (title, df) = admissionFrames.get(n) match {
+        case Some(frame) => (s"$n (admission-chain frame)", frame(spark, sfDir))
+        case None => (n, SparkEntry.queries(n)(spark, sfDir))
+      }
+      println(s"\n========== $title ==========")
+      df.explain("formatted")
     }
     spark.stop()
   }

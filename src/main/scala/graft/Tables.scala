@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Parquet table registry over the driver-generated test data
   * (see TESTDATA.md / FIXTURES.md §B).
@@ -38,7 +39,7 @@ object Tables {
         java.nio.file.Paths.get(path),
         classOf[java.nio.file.attribute.BasicFileAttributes])
       s"${a.lastModifiedTime.toMillis}|${a.size}"
-    } catch { case _: Throwable => "nofile" }
+    } catch { case NonFatal(_) => "nofile" }
     schemaCache.getOrElseUpdate(
       s"${s.sparkContext.applicationId}|$path|$stamp",
       s.read.parquet(path).schema)
@@ -126,7 +127,7 @@ object Tables {
         java.nio.file.Paths.get(path.stripPrefix("file:")),
         classOf[java.nio.file.attribute.BasicFileAttributes])
       s"${a.lastModifiedTime.toMillis}|${a.size}"
-    } catch { case _: Throwable => "nofile" }
+    } catch { case NonFatal(_) => "nofile" }
     rowGroupCache.getOrElseUpdate(
       s"${s.sparkContext.applicationId}|$path|$stamp", {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -219,14 +220,14 @@ object Tables {
     val s = df.sparkSession
     val target = s.sparkContext.defaultParallelism
     val groups = paths.map(p =>
-      try fileRowGroups(s, p) catch { case _: Throwable => Int.MaxValue / paths.size }).sum
+      try fileRowGroups(s, p) catch { case NonFatal(_) => Int.MaxValue / paths.size }).sum
     // size floor (the batch widened's 2 MB lesson, measured again here:
     // at sf0.1 the per-batch kernel is ~0.1-0.3 s and the added stream
     // shuffle cost more than it spread — st14 +0.28 s, st20 +0.36 s —
     // while at 30x the same sites won 7-13 s/query)
     val bytes = paths.map(p =>
       try java.nio.file.Files.size(java.nio.file.Paths.get(p))
-      catch { case _: Throwable => 0L }).sum
+      catch { case NonFatal(_) => 0L }).sum
     if (bytes >= (2L << 20) && groups * 2 <= target)
       df.repartition(target, key)
     else df

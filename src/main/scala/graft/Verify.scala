@@ -1,32 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // scan-split parallelism — keep Verify's plans/layouts identical
-      // to Bench's (see the Bench builder comment; r18 guide §6.1)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "65536"))
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // ml04's EM checkpointInterval=10 only truncates the EM state's
-    // lineage when a checkpoint dir exists (r16 verdict #3 — without one
-    // checkpointing silently no-ops and per-iteration time creeps with
-    // the growing task binary); dir deleted at JVM exit (r17 verdict #3)
-    spark.sparkContext.setCheckpointDir(TempDirs.deleteOnExit("graft_ckpt"))
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name-prefix filter for local iteration,
     // mirroring Bench (unset → full surface; the driver never sets it).
@@ -35,10 +15,9 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     def selected(name: String) = only.forall(_.exists(name.startsWith))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      Bench.guarded("verify", name, "failed") {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * array_max fold per ELEMENT (O(d²) interpreted work); even with the
   * max hoisted to a column, two interpreted `transform` lambdas per row
   * remained the dominant cost of the int8 pipeline — measured 11.1 s of
-  * ss06's 12.3 s total on the 30× fixture (tools/ProbeSs06.scala). This
+  * ss06's 12.3 s total on the 30× fixture (NOTES.md, Round 8). This
   * is one fused codegen'd loop: max pass + quantize pass, no
   * intermediate arrays, no closure dispatch.
   */

@@ -470,10 +470,10 @@ object Multimodal {
     }
   }
 
-  /** The banded intermediates of mm07's dataflow, factored so
-    * [[perceptualAdmission]] and the candidate-volume probe
-    * ([[graft.tools.ProbeMm07]]) share one construction. `hash` is
-    * CACHED — the caller must unpersist it when done. */
+  /** The banded intermediates of mm07's dataflow, factored so mm07,
+    * dd17 and the spec entry [[perceptualAdmission]] share one
+    * construction. `hash` is CACHED — the caller must unpersist it when
+    * done. */
   private[graft] case class PerceptualParts(
       eligible: DataFrame, hash: DataFrame, r: Int, nAll: Long, nCorp: Long,
       banded: DataFrame, binc: DataFrame, bcorp: DataFrame, bincP: DataFrame)
@@ -593,7 +593,7 @@ object Multimodal {
     }
   }
 
-  /** Spec/probe entry: builds its own parts and releases the cached
+  /** Spec entry: builds its own parts and releases the cached
     * hash when the decision frame is materialized. The production
     * QueryDef path goes through [[sharedParts]] instead. */
   private[graft] def perceptualAdmission(
@@ -973,17 +973,7 @@ object Multimodal {
     * lock THIS frame's physical plan — the query's own executed plan
     * is the packing tail downstream of the GlobalCumsum checkpoints.
     * Fully lazy except the dial count. */
-  private[graft] def multimodalAdmitted(s: SparkSession, d: String): DataFrame =
-    multimodalParts(s, d).admitted
-
-  /** sp12's staged frames (the PerceptualParts precedent), so the scale
-    * probe (ProbeSp12) can report the candidate/bin accounting the
-    * mm07/ProbeMm07 legs report — gated-eligible N, the dial, and the
-    * post-prune candidate-pair volume — without duplicating the chain. */
-  private[graft] case class Sp12Parts(
-      nAll: Long, r: Int, pairs: DataFrame, admitted: DataFrame)
-
-  private[graft] def multimodalParts(s: SparkSession, d: String): Sp12Parts = {
+  private[graft] def multimodalAdmitted(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Curation
     val rules = Curation.ta09.fn(s, d).select(col("doc_id"), col("keep"))
     val gated = Curation.qualityDf(s, d)
@@ -1053,12 +1043,11 @@ object Multimodal {
         col("e.susp").as("susp"))
       .groupBy("doc_id")
       .agg(max("rej").as("rejected"), max("susp").as("suspect"))
-    val admitted = gated
+    gated
       .join(flags, Seq("doc_id"), "left")
       .filter(!coalesce(col("rejected"), lit(false)) &&
         !coalesce(col("suspect"), lit(false)))
       .select("doc_id", "nt", "quality")
-    Sp12Parts(nAll, r, pairs, admitted)
   }
 
   val defs: Seq[QueryDef] =

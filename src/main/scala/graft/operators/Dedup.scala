@@ -131,8 +131,8 @@ object Dedup {
     * 1 + min(|A|−pa, |B|−pb) ≥ t/(1+t)·(|A|+|B|) (the minimal row has
     * the loosest bound, so a qualifying pair always survives via it;
     * comparison carries a 1e−9 slack so binary-float t can never
-    * round-prune a boundary pair). The r8 sf1 probe
-    * (tools/ProbeDd02.scala) measured the prefix-only join at 60.7 M
+    * round-prune a boundary pair). The r8 sf1 stage decomposition
+    * (NOTES.md, Round 8) measured the prefix-only join at 60.7 M
     * candidate pairs / 84 s verify for a 60 k-doc corpus of short
     * templated docs (prefix keeps ~70% of 40-shingle sets — near-
     * useless alone when every doc shares moderately-rare template
@@ -202,7 +202,7 @@ object Dedup {
       // when it fits a broadcast, BOTH verify joins become map-side
       // lookups against the candidate stream instead of shuffling the
       // (possibly 10⁷-row) candidate table twice with full array
-      // payloads: measured 89 s → 7.7 s at sf1 (tools/ProbeDd02.scala).
+      // payloads: measured 89 s → 7.7 s at sf1 (NOTES.md, Round 9).
       // Past the threshold — true corpus scale, where no doc-fingerprint
       // table fits in memory — the shuffle join is the correct plan and
       // is kept automatically.
@@ -517,7 +517,7 @@ object Dedup {
     * halving + min-id relabel — O(E α(E)), one collect of 16-byte
     * pairs ≤ 64 MB) instead of N synchronous label-propagation rounds
     * whose cost at small scale is pure scheduler floor (~0.5 s/round
-    * measured, tools/ProbeCc). The same CBO move as SetsBroadcastBytes:
+    * measured, NOTES.md Round 9). The same CBO move as SetsBroadcastBytes:
     * measure the actual size, solve locally while it provably fits,
     * keep the distributed fixpoint as the at-scale plan. The threshold
     * is the EDGE LIST size, not the corpus size — a 100 TB corpus whose
@@ -807,7 +807,7 @@ object Dedup {
     // tie-break moved from gram to loc0 (unique per h, so the order is
     // total) on BOTH engines.
     graft.functions.ShingleStats.register(s)
-    // index-explode + subscript (ProbeGen: 2.7× vs the kernel as the
+    // index-explode + subscript (NOTES.md, round 10: 2.7× vs the kernel as the
     // generator child, which the Generate path partially re-evaluates)
     val sp = T.widened(T.documents(s, d), T.DenseKernelFloor)
       .select(col("doc_id"), expr("shingle_stats(text, 8)").as("gs"))

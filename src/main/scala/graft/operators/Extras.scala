@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables => T}
+import graft.{GraftSession, QueryDef, Tables => T}
 import graft.functions.{ExactAgg, ExactMean}
 import org.apache.spark.sql.functions._
 
@@ -96,18 +96,6 @@ object Extras {
       .orderBy("lang")
   }
 
-  /** Clone of `s` (shared SparkContext, PRIVATE SessionState) carrying
-    * the given conf overrides — scopes the runtime-tuning demos (q64
-    * skew, q69 bloom) to their own session instead of the pre-r8
-    * set-then-restore on the caller's conf, which was racy under
-    * concurrent queries in one session (r7 verdict item #5's pattern). */
-  private def scoped(s: org.apache.spark.sql.SparkSession,
-      kv: Seq[(String, String)]): org.apache.spark.sql.SparkSession = {
-    val ss = s.newSession()
-    kv.foreach { case (k, v) => ss.conf.set(k, v) }
-    ss
-  }
-
   /** AQE-tuned session settings for [[q64]]: thresholds scaled down to
     * sf0.1 partition sizes (the defaults are 256 MB/64 MB — sized for a
     * real cluster, where these lines are the ONLY tuning a skewed join
@@ -191,7 +179,7 @@ object Extras {
       |FROM fact f JOIN dim d ON f.jk = d.jk
       |GROUP BY f.jk
       |ORDER BY f.jk""".stripMargin) { (s, d) =>
-    val df = skewJoined(scoped(s, q64SkewConfs), d)
+    val df = skewJoined(GraftSession.scoped(s, q64SkewConfs: _*), d)
     val (rows, schema) = (df.collect(), df.schema)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
@@ -362,7 +350,7 @@ object Extras {
       |WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderstatus = 'F'
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-    val df = bloomJoined(scoped(s, q69BloomConfs), d)
+    val df = bloomJoined(GraftSession.scoped(s, q69BloomConfs: _*), d)
     val (rows, schema) = (df.collect(), df.schema)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }

@@ -112,7 +112,7 @@ object Grouping {
       |     <= 0.05e0 * COUNT(DISTINCT l_orderkey)) AS approx_orders_ok
       |FROM lineitem""".stripMargin) { (s, d) =>
     // N distinct-counts over DIFFERENT columns as ONE scan + a manual
-    // unpivot (tools/ProbeQ21r, r10 verdict sf1 plan-audit item):
+    // unpivot (NOTES.md Round 11, r10 verdict sf1 plan-audit item):
     // posexplode the three key columns to (gid, v) — 3× the rows but
     // only two longs wide — partial-dedup groupBy(gid, v) (map-side
     // combine shrinks the shuffle to the per-partition distinct

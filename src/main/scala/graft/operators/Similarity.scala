@@ -334,7 +334,7 @@ object Similarity {
     // to the HOF transform/round form (same BigDecimal HALF_UP call per
     // element, spec-locked), one fused codegen loop instead of the
     // interpreted lambdas that were 11.1 of ss06's 12.3 s at the 30×
-    // fixture (tools/ProbeSs06.scala)
+    // fixture (NOTES.md, Round 8)
     graft.functions.FloatSq8.register(s)
     val e = T.embeddings(s, d)
       .select(col("vec_id"), expr("vec_sq8(embedding)").as("qv"))
@@ -587,7 +587,7 @@ object Similarity {
   }
 
   /** [[simhashNeardup]]'s signature + band construction, factored so the
-    * candidate-volume probe (graft.tools.ProbeDd07) always measures the
+    * candidate-volume measurements (NOTES.md, Round 16) ran the
     * PRODUCTION layout — narrow contiguous r-bit windows through the
     * clamp, 30-bit lanes of the 120-plane signature past it (r15 ADVICE
     * #3: the probe's private re-implementation had drifted from the
@@ -1313,7 +1313,7 @@ object Similarity {
     graft.functions.TopKVals.register(s)
     graft.functions.TopKIds.register(s)
     // index-explode + subscript: the probe-cell array stays a projected
-    // column outside the Generate (ProbeGen: the generator-child form
+    // column outside the Generate (NOTES.md, round 10: the generator-child form
     // re-evaluates the transform chain when the assignment is not
     // cached, as in the plain production call)
     def probed(asg: org.apache.spark.sql.DataFrame, id: String, vec: String) =

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import graft.{QueryDef, Tables => T}
+import graft.{GraftSession, QueryDef, Tables => T}
 import graft.functions.ExactAgg._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.util.control.NonFatal
 
 /** Structured Streaming surface over the `events` table. The reference
   * has no streaming (SURVEY.md §1.3) — declared extension.
@@ -39,20 +40,13 @@ object Streams {
       |FROM events
       |GROUP BY 1, 2
       |ORDER BY window_start, event_type""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val stream = T.eventsStream(s, d)
     val agg = stream
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-    val name = s"st01_sink_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(agg, "complete", "st01")
+    sortedLocal(sink
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value")),
       col("window_start"), col("event_type"))
@@ -79,21 +73,14 @@ object Streams {
       |WHERE date_trunc('hour', CAST(ts AS TIMESTAMP)) + INTERVAL 1 HOUR <= mx.w
       |GROUP BY 1, 2
       |ORDER BY window_start, event_type""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val stream = T.eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
     val agg = stream
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-    val name = s"st01b_sink_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(agg, "append", "st01b")
+    sortedLocal(sink
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value")),
       col("window_start"), col("event_type"))
@@ -142,7 +129,7 @@ object Streams {
     * it is held to st02's oracle SQL (StreamsSpec additionally asserts
     * the frame-level equivalence in-JVM). */
   val st03 = QueryDef.sql("st03_stateful_sessions", st02.oracle.get) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     stateful(s, d)
   }
 
@@ -164,52 +151,63 @@ object Streams {
         "handle cross-batch event-time order/eviction before lifting this")
   }
 
-  /** A cloned session — shared SparkContext/SharedState, PRIVATE
-    * SessionState — carrying per-query conf overrides (r7 verdict item
-    * #5). Stateful streams pin their state-store partition count from
-    * the session conf at query START; the pre-r8 pattern of mutating the
-    * caller's session-global conf around `.start()` (restored in a
-    * `finally`) was racy under concurrent queries in one session. The
-    * clone scopes the override to this query alone: sources, the stream,
-    * and the memory-sink table all live on the clone, and the caller's
-    * conf is never touched. Builder-time configs (timezone, AQE,
-    * nanosAsLong) carry over via the shared initial session options. */
-  /** Shuffle/state partition dial shared by the replayed streaming
-    * queries: each shuffle partition instantiates per-operator state
+  /** Shuffle/state partition width of the replayed streaming queries,
+    * picked ONCE per query (changing it later needs a checkpoint
+    * reset). Each shuffle partition instantiates per-operator state
     * stores per micro-batch, so 32 stores over a 150-user single-file
-    * replay is pure fixed cost (st08 measured 11 s -> ~4 s at 8; the
-    * family-wide A/B in tools/ProbeStream measured -30% at 4). A real
-    * deployment sizes this dial UP with key cardinality / state bytes —
-    * same knob, opposite direction — and picks it ONCE per query, since
-    * changing it later needs a checkpoint reset. */
-  /** SCALE-ADAPTIVE default (r19 sf1/sf3 re-sweep, guide §2.2): one
-    * shuffle/state partition per MiB of replayed input (the dir's
-    * events.parquet as scale proxy), clamped to [4, defaultParallelism].
-    * The clamp floor reproduces the r9-measured optimum at the graded
-    * scales (sf0.001–0.1 are ≤2 MiB → 4, so the driver's bench and the
-    * oracle runs are byte-identical to the old constant); the measured
-    * curve above it: sf1 (17 MiB → 16) 88.3 s @4 vs 82.7 @16, sf3
-    * (49 MiB → 32) 439.8 @4 / 289.8 @8 / 249.7 @16 / 210.1 @32 —
-    * monotone to the box's cores, because per-partition state-store
-    * instantiation amortizes once state bytes grow past fixed cost.
-    * SPARK_GRAFT_STREAM_PARTS still overrides both directions for
-    * deployments (picked ONCE per query — changing it later needs a
-    * checkpoint reset). */
+    * replay is pure fixed cost (st08 measured 11 s -> ~4 s at 8; the r9
+    * family-wide A/B measured -30% at 4, OPTIMIZATION_r18.md
+    * "Deliberately left alone"). The width is DERIVED from the replayed
+    * input, one partition per MiB of the dir's events.parquet
+    * (OPTIMIZATION_r19.md §7): sf0.001–0.1 are ≤2 MiB → 4, the r9
+    * optimum; sf1 (17 MiB → 16) 88.3 s @4 vs 82.7 @16; sf3 (49 MiB →
+    * 32) 439.8 @4 / 289.8 @8 / 249.7 @16 / 210.1 @32 — monotone to the
+    * box's cores, because per-partition state-store instantiation
+    * amortizes once state bytes grow past fixed cost. */
   private[graft] def streamPartsValue(s: SparkSession, d: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      val bytes =
-        try java.nio.file.Files.size(java.nio.file.Paths.get(s"$d/events.parquet"))
-        catch { case _: Throwable => 0L }
-      math.max(4L, math.min(s.sparkContext.defaultParallelism.toLong,
-        bytes >> 20)).toInt
-    }
+    streamWidth(inputBytes(s, s"$d/events.parquet"),
+      s.sparkContext.defaultParallelism)
+
+  /** One partition per MiB of input, at least 4, capped at
+    * `parallelism`: min(parallelism, max(4, MiB)). */
+  private[graft] def streamWidth(bytes: Long, parallelism: Int): Int =
+    math.min(parallelism.toLong, math.max(4L, bytes >> 20)).toInt
+
+  /** Bytes of a parquet input, single file or directory layout: the
+    * sum of its data files through the Hadoop FileSystem API, skipping
+    * `_SUCCESS`/`_metadata` and hidden `.crc` files. 0 when the path
+    * cannot be listed. */
+  private[graft] def inputBytes(s: SparkSession, path: String): Long =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val files = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
+      var total = 0L
+      while (files.hasNext) {
+        val f = files.next()
+        val n = f.getPath.getName
+        if (!n.startsWith("_") && !n.startsWith(".")) total += f.getLen
+      }
+      total
+    } catch { case NonFatal(_) => 0L }
+
   private def streamParts(s: SparkSession, d: String): (String, String) =
     "spark.sql.shuffle.partitions" -> streamPartsValue(s, d).toString
 
-  private def scopedSession(s: SparkSession, confs: (String, String)*): SparkSession = {
-    val ss = s.newSession()
-    confs.foreach { case (k, v) => ss.conf.set(k, v) }
-    ss
+  /** Run a streaming frame to completion into a memory sink and read
+    * the sink back: start, drain with `processAllAvailable`, stop in a
+    * `finally`, then return the sink's table on the frame's own session
+    * (the memory sink registers it there, i.e. on the scoped clone). */
+  private def runToCompletion(df: Dataset[_], outputMode: String,
+      label: String): DataFrame = {
+    val name = s"${label}_sink_${System.nanoTime()}"
+    val q = df.writeStream
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(name)
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+    df.sparkSession.table(name)
   }
 
   /** Total-order the memory-sink read-back in ONE task. The sink has
@@ -273,17 +271,10 @@ object Streams {
       .select(col("user_id"), unix_micros(col("ts")).as("tsMicros"))
       .as[Ev]
     val sessions = sessionStates(stream)
-    val name = s"st03_sink_${System.nanoTime()}"
-    val q = sessions.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val sink = runToCompletion(sessions, "update", "st03")
     // update-mode memory sink appends one row per user PER micro-batch;
     // keep only the latest state (n_events is monotone within a user)
-    sortedLocal(s.table(name)
+    sortedLocal(sink
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("st"))
       .select(col("user_id"), col("st.n_sessions").as("n_sessions"),
@@ -326,7 +317,7 @@ object Streams {
       |FROM sess
       |GROUP BY user_id, sidx
       |ORDER BY user_id, session_idx""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     sessionDetails(s, d)
   }
 
@@ -365,17 +356,10 @@ object Streams {
           }
           out.iterator
       }
-    val name = s"st04_sink_${System.nanoTime()}"
-    val q = rows.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val sink = runToCompletion(rows, "update", "st04")
     // keep the latest emission per (user, session): n_events is monotone
     // within a session, so max(struct) picks the final view
-    sortedLocal(s.table(name)
+    sortedLocal(sink
       .groupBy("user_id", "session_idx")
       .agg(max(struct(col("n_events"), col("end_us"), col("start_us"))).as("x"))
       .select(col("user_id"), col("session_idx"),
@@ -396,21 +380,14 @@ object Streams {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val stream = T.eventsStream(s, d)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_unique_users"))
-    val name = s"st05_sink_${System.nanoTime()}"
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name), col("event_type"))
+    val sink = runToCompletion(stream, "complete", "st05")
+    sortedLocal(sink, col("event_type"))
   }
 
   /** st11 — dropDuplicatesWithinWatermark: the BOUNDED-STATE shape of
@@ -431,20 +408,13 @@ object Streams {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val stream = T.eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
       .select(col("ts"), col("user_id"), col("event_type"))
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-    val name = s"st11_sink_${System.nanoTime()}"
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(stream, "append", "st11")
+    sortedLocal(sink
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_unique_users")),
       col("event_type"))
@@ -482,21 +452,14 @@ object Streams {
       |WHERE window_start + INTERVAL 1 HOUR <= mx.w
       |GROUP BY 1, 2
       |ORDER BY window_start, event_type""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val stream = T.eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
     val agg = stream
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-    val name = s"st12_sink_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(agg, "append", "st12")
+    sortedLocal(sink
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value")),
       col("window_start"), col("event_type"))
@@ -538,21 +501,14 @@ object Streams {
       |SELECT user_id, session_start, session_end, n_events
       |FROM g, mx WHERE session_end <= mx.w
       |ORDER BY user_id, session_start""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val stream = T.eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
     val agg = stream
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-    val name = s"st13_sink_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(agg, "append", "st13")
+    sortedLocal(sink
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
@@ -662,7 +618,7 @@ object Streams {
       |WHERE date_trunc('hour', CAST(ts AS TIMESTAMP)) + INTERVAL 1 HOUR <= wm2.w
       |GROUP BY 1, 2
       |ORDER BY window_start, event_type""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val inDir = stageLateReplay(s, d)
     // staged files are written from the adaptive loader: ts is already
     // a normalized TimestampType column
@@ -674,15 +630,8 @@ object Streams {
     val agg = stream
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-    val name = s"st06_sink_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(agg, "append", "st06")
+    sortedLocal(sink
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value")),
       col("window_start"), col("event_type"))
@@ -707,7 +656,7 @@ object Streams {
       |FROM j
       |GROUP BY category
       |ORDER BY category""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     import s.implicits._
     val dim = Seq(
       ("click", "engagement", 1), ("view", "engagement", 1),
@@ -719,15 +668,8 @@ object Streams {
       .groupBy("category")
       .agg(count(lit(1)).as("n"),
         dsum(col("value") * col("w")).as("weighted_value"))
-    val name = s"st07_sink_${System.nanoTime()}"
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name), col("category"))
+    val sink = runToCompletion(stream, "complete", "st07")
+    sortedLocal(sink, col("category"))
   }
 
   /** st08 — stream-stream interval join: view→purchase conversion pairs
@@ -759,7 +701,7 @@ object Streams {
     // A 100 TB deployment sizes this UP instead — same knob, opposite
     // direction. Scoped to a cloned session so the caller's conf is
     // never mutated (racy under concurrent queries).
-    val ss = scopedSession(s, streamParts(s, d))
+    val ss = GraftSession.scoped(s, streamParts(s, d))
     def src() = T.eventsStream(ss, d).withColumn("ets", col("ts"))
     val views = src().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
@@ -773,15 +715,8 @@ object Streams {
       expr("""p_user = v_user
              |AND purchase_ts > view_ts
              |AND purchase_ts <= view_ts + interval 30 minutes""".stripMargin))
-    val name = s"st08_sink_${System.nanoTime()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(ss.table(name)
+    val sink = runToCompletion(joined, "append", "st08")
+    sortedLocal(sink
       .select(col("v_user").as("user_id"), col("view_id"), col("purchase_id"),
         col("view_ts"), col("purchase_ts")),
       col("view_id"), col("purchase_id"))
@@ -836,7 +771,7 @@ object Streams {
       |ORDER BY view_id, purchase_id NULLS FIRST""".stripMargin) { (s, d) =>
     assertSingleReplayFile(d)
     // per-query state-store sizing via a cloned session (see st08)
-    val ss = scopedSession(s, streamParts(s, d))
+    val ss = GraftSession.scoped(s, streamParts(s, d))
     def src() = T.eventsStream(ss, d).withColumn("ets", col("ts"))
     val views = src().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
@@ -851,15 +786,8 @@ object Streams {
              |AND purchase_ts > view_ts
              |AND purchase_ts <= view_ts + interval 30 minutes""".stripMargin),
       "left_outer")
-    val name = s"st15_sink_${System.nanoTime()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(ss.table(name)
+    val sink = runToCompletion(joined, "append", "st15")
+    sortedLocal(sink
       .select(col("v_user").as("user_id"), col("view_id"), col("purchase_id"),
         col("view_ts"), col("purchase_ts")),
       col("view_id"), col("purchase_id").asc_nulls_first)
@@ -878,7 +806,7 @@ object Streams {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val inDir = stageLateReplay(s, d)
     val outDir = java.nio.file.Files.createTempDirectory("graft_st09").toString
     val schema = graft.Tables.fileSchema(s, inDir)
@@ -940,10 +868,10 @@ object Streams {
     * transformWithState) must agree bit-for-bit. */
   val st10 = QueryDef.sql("st10_transform_with_state", st02.oracle.get) { (s, d) =>
     assertSingleReplayFile(d)
-    // RocksDB provider scoped to a cloned session (see scopedSession):
+    // RocksDB provider scoped to a cloned session (see GraftSession.scoped):
     // the pre-r8 set/finally-restore on the caller's conf was racy under
     // concurrent queries in one session
-    val ss = scopedSession(s, streamParts(s, d),
+    val ss = GraftSession.scoped(s, streamParts(s, d),
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import ss.implicits._
@@ -955,15 +883,8 @@ object Streams {
       .transformWithState(new SessionProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-    val name = s"st10_sink_${System.nanoTime()}"
-    val q = sessions.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(ss.table(name)
+    val sink = runToCompletion(sessions, "update", "st10")
+    sortedLocal(sink
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("st"))
       .select(col("user_id"), col("st.n_sessions").as("n_sessions"),
@@ -1025,9 +946,8 @@ object Streams {
     // kernel on ONE task (~20 s of st14's sf1 cost measured). 4 MB
     // splits parallelize the micro-batch with zero plan change — the
     // same dial a real ingest tunes for CPU-dense extraction stages.
-    val s = scopedSession(s0, streamParts(s0, d),
+    val s = GraftSession.scoped(s0, streamParts(s0, d),
       "spark.sql.files.maxPartitionBytes" -> "4m")
-    val name = s"st14_sink_${System.nanoTime()}"
     // filter BEFORE the signature kernel (80%/20% split — no point
     // signing docs a side immediately drops) and widen the narrow
     // single-file batch scan for the compute-bound kernel; the STREAM
@@ -1061,14 +981,8 @@ object Streams {
       .join(corpusIndex, Seq("i", "m"))
       .groupBy("incoming_id", "corpus_id")
       .agg(count(lit(1)).as("shared_bands"))
-    val q = admitted.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(admitted, "complete", "st14")
+    sortedLocal(sink
       .select(col("incoming_id"), col("corpus_id"), col("shared_bands"),
         (col("shared_bands") * lit(1.0) / 8).as("est_sim")),
       col("incoming_id"), col("corpus_id"))
@@ -1092,7 +1006,7 @@ object Streams {
     // unpivot by exploding a CONSTANT index array and subscripting: with
     // the kernel as the generator child (posexplode(minhash_sigs(...)))
     // the Generate path re-evaluated it per emitted row — 8× the
-    // signature cost, measured 7.4 s vs 0.8 s at sf1 (ProbeSt14). This
+    // signature cost, measured 7.4 s vs 0.8 s at sf1 (r9). This
     // shape keeps the kernel a plain projected column outside the
     // Generate, stays narrow (no barrier), and runs identically on
     // batch and streaming frames.
@@ -1141,7 +1055,7 @@ object Streams {
       |  est_cnt - exact_cnt <= 2 * (SELECT n FROM n) / 256 AS within_eps
       |FROM est
       |ORDER BY exact_cnt DESC, user_id""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     def bucket(dCol: org.apache.spark.sql.Column, u: org.apache.spark.sql.Column) =
       conv(substring(md5(concat(dCol.cast("string"), lit("|"), u.cast("string"))), 1, 8),
         16, 10).cast("long") % 256
@@ -1149,15 +1063,7 @@ object Streams {
       .select(col("user_id"), explode(expr("array(0, 1, 2, 3)")).as("d"))
       .withColumn("bucket", bucket(col("d"), col("user_id")))
       .groupBy("d", "bucket").agg(count(lit(1)).as("c"))
-    val name = s"st16_sink_${System.nanoTime()}"
-    val q = cellsAgg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val cells = s.table(name)
+    val cells = runToCompletion(cellsAgg, "complete", "st16")
     // ε audit WITHOUT a batch action (r8 verdict item #5): every event
     // lands in exactly one bucket per depth row, so a single row's cell
     // sum IS the stream count N — derive it from the sketch inside the
@@ -1224,7 +1130,7 @@ object Streams {
       |FROM g, mx, customer c
       |WHERE c.c_custkey = g.user_id + 1 AND session_end <= mx.w
       |ORDER BY user_id, session_start""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     val stream = T.eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
     val sessions = stream
@@ -1233,16 +1139,8 @@ object Streams {
     val cust = broadcast(T.customer(s, d)
       .select((col("c_custkey") - 1).as("user_id"),
         col("c_mktsegment").as("segment")))
-    val name = s"st17_sink_${System.nanoTime()}"
-    val q = sessions.join(cust, "user_id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(sessions.join(cust, "user_id"), "append", "st17")
+    sortedLocal(sink
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
@@ -1292,7 +1190,7 @@ object Streams {
       |FROM r GROUP BY 1, 2
       |ORDER BY user_id, window_start""".stripMargin) { (s0, d) =>
     assertSingleReplayFile(d)
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     import s.implicits._
     val quota = 2L
     val dayUs = 86400L * 1000000L
@@ -1320,15 +1218,8 @@ object Streams {
           state.update(st)
           QuotaRow(key._1, key._2, st.nAdmitted, st.nRejected, st.maxAdmitted)
       }
-    val name = s"st18_sink_${System.nanoTime()}"
-    val q = admitted.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(admitted, "update", "st18")
+    sortedLocal(sink
       .groupBy("user_id", "win_us")
       .agg(max(struct(col("n_admitted") + col("n_rejected"),
         col("n_admitted"), col("n_rejected"), col("max_admitted_event"))).as("st"))
@@ -1558,7 +1449,7 @@ object Streams {
        |FROM scored
        |ORDER BY incoming_id, corpus_id""".stripMargin) { (s0, d) =>
     import graft.operators.{Similarity => Sim}
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     Sim.regDot(s)
     val idx = st19StandingIndex(s, d)
     val (corpIdx, r19) = (idx.hinted, idx.r)
@@ -1575,15 +1466,8 @@ object Streams {
         expr(Sim.dotExpr.format("ie", "ce")) / (col("inrm") * col("cnrm")))
       .groupBy("incoming_id", "corpus_id")
       .agg(count(lit(1)).as("shared_bands"), max(col("cos")).as("cos_sim"))
-    val name = s"st19_sink_${System.nanoTime()}"
-    val q = admitted.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(admitted, "complete", "st19")
+    sortedLocal(sink
       .select(col("incoming_id"), col("corpus_id"), col("shared_bands"),
         col("cos_sim"), (col("cos_sim") >= 0.35).as("is_neardup")),
       col("incoming_id"), col("corpus_id"))
@@ -1618,7 +1502,7 @@ object Streams {
       |FROM embeddings WHERE vec_id % 5 = 0
       |ORDER BY vec_id""".stripMargin) { (s0, d) =>
     import graft.operators.{Similarity => Sim}
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     Sim.regDot(s)
     val (km, pq) = Sim.epochModels(s, d)
     // the standing index: memoized + cached per (application, dir) and
@@ -1633,15 +1517,8 @@ object Streams {
     val admitted = Sim.ivfCellAdmission(
       T.widenedStream(stream.filter(col("vec_id") % 5 === 0),
         col("vec_id"), s"$d/embeddings.parquet"), index, km)
-    val name = s"st20_sink_${System.nanoTime()}"
-    val q = admitted.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(admitted, "complete", "st20")
+    sortedLocal(sink
       .select(col("vec_id"), col("n_probe_cells"), col("cell_is_argmin"),
         col("adc_cos_in_range")),
       col("vec_id"))
@@ -1851,7 +1728,7 @@ object Streams {
       |        ELSE CAST(COALESCE(led.ntf, 0) AS DOUBLE) / ids.nf END) < 0.5e0 AS admitted
       |FROM ids LEFT JOIN led ON ids.doc_id = led.doc_id
       |ORDER BY ids.doc_id""".stripMargin) { (s0, d) =>
-    val s = scopedSession(s0, streamParts(s0, d))
+    val s = GraftSession.scoped(s0, streamParts(s0, d))
     // standing state, materialized + counted BEFORE the stream starts
     val idx = st21StandingIndex(s, d)
     val schema = graft.Tables.fileSchema(s, s"$d/documents.parquet")
@@ -1865,15 +1742,8 @@ object Streams {
       T.widenedStream(stream.filter(col("doc_id") % 5 === 0),
         col("doc_id"), s"$d/documents.parquet"),
       idx.hinted)
-    val name = s"st21_sink_${System.nanoTime()}"
-    val q = ledger.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sortedLocal(s.table(name)
+    val sink = runToCompletion(ledger, "complete", "st21")
+    sortedLocal(sink
       .select(col("doc_id"), col("n_frames"), col("n_twin_frames"),
         col("n_corpus_docs"), col("matched_ratio"), col("admitted")),
       col("doc_id"))
