@@ -592,8 +592,13 @@ object Bench {
         entries.mkString("\"salvage\":{", ",", "},") +
           "\"salvage_spent\":" + num(salvageSpent) + ","
       }
+    // builds, hits and evictions per memo slot, read once after the
+    // timed passes
+    val memoJson = Memo.counts.map { case (slot, c) =>
+      s""""$slot":{"builds":${c.builds},"hits":${c.hits},"evictions":${c.evictions}}"""
+    }.mkString("\"memo\":{", ",", "},")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","value_wall":$totalWall,"first_run_sum":$totalFirst,"cold_value":$totalCold,"budget_exhausted":$budgetExhausted,"pins_active":$pinsActive,"contended":$contended,"over_pin":$overPin,"queries":$qs,"first_runs":$firstRuns,"runs":$runCounts,$pricedJson$loadJson$salvageJson$iterTimes$stageTimes"sf":"$sfDir","failures":$fails,"protocol":"queries=min of up to $reps runs (repeats only when first<${repeatThreshold}s, global extra budget ${repeatBudget}s; ANY query retries up to twice when best>1.5x its BENCH_EXPECT.json pin — a :cold pin exempts a memoized query's first run, ml04/ml06 are judged on median iter time, and pin retries are disabled entirely when the sf dir is not the pins' _pin_dir (pins_active=false) — budget ${heavyBudget}s); after the main loop a steal-gated salvage pass re-runs still-over-pin queries cheapest-pin-first (up to 2 runs each, every attempt preceded by a ~1s zero-steal probe, budget ${salvageBudget}s incl. probe sleeps; per-candidate [runs,skipped_steal,improved] in salvage); value=de-noised sum of per-query minima with iter-telemetry queries priced at median-iter x n + non-iter overhead using the BEST run's telemetry, and q39/q70 priced at cold wall minus their one-time build stages when the minimum is still the cold run (all pricing capped at measured best; substitutions in priced), value_wall=same sum unpriced, cold_value=the priced sum with every query carrying a <name>:cold pin (the memoized standing builds) priced at its cold FIRST run instead of its warm minimum — the cold-inclusive headline, first_run_sum=sum of first runs, first_runs=per-query first (cold) runs, runs=per-query run counts (1 = single cold sample), load=per-query [loadavg_before,loadavg_after,steal_sec], over_pin=queries ending >1.5x pin after retries+salvage, contended=true when over_pin>=10 and >=10% of surface (box-level interference), budget_exhausted=true when a retry budget drained mid-suite"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","value_wall":$totalWall,"first_run_sum":$totalFirst,"cold_value":$totalCold,"budget_exhausted":$budgetExhausted,"pins_active":$pinsActive,"contended":$contended,"over_pin":$overPin,"queries":$qs,"first_runs":$firstRuns,"runs":$runCounts,$pricedJson$loadJson$salvageJson$iterTimes$stageTimes$memoJson"sf":"$sfDir","failures":$fails,"protocol":"queries=min of up to $reps runs (repeats only when first<${repeatThreshold}s, global extra budget ${repeatBudget}s; ANY query retries up to twice when best>1.5x its BENCH_EXPECT.json pin — a :cold pin exempts a memoized query's first run, ml04/ml06 are judged on median iter time, and pin retries are disabled entirely when the sf dir is not the pins' _pin_dir (pins_active=false) — budget ${heavyBudget}s); after the main loop a steal-gated salvage pass re-runs still-over-pin queries cheapest-pin-first (up to 2 runs each, every attempt preceded by a ~1s zero-steal probe, budget ${salvageBudget}s incl. probe sleeps; per-candidate [runs,skipped_steal,improved] in salvage); value=de-noised sum of per-query minima with iter-telemetry queries priced at median-iter x n + non-iter overhead using the BEST run's telemetry, and q39/q70 priced at cold wall minus their one-time build stages when the minimum is still the cold run (all pricing capped at measured best; substitutions in priced), value_wall=same sum unpriced, cold_value=the priced sum with every query carrying a <name>:cold pin (the memoized standing builds) priced at its cold FIRST run instead of its warm minimum — the cold-inclusive headline, first_run_sum=sum of first runs, first_runs=per-query first (cold) runs, runs=per-query run counts (1 = single cold sample), load=per-query [loadavg_before,loadavg_after,steal_sec], over_pin=queries ending >1.5x pin after retries+salvage, contended=true when over_pin>=10 and >=10% of surface (box-level interference), budget_exhausted=true when a retry budget drained mid-suite"}"""
     // Stop Spark BEFORE printing so no executor/shutdown logging can
     // interleave with (or follow) the metric line; also persist a copy —
     // the round-1 driver failed to tail-parse stdout (sbt appends

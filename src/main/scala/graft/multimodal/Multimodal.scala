@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.{QueryDef, Tables => T}
+import graft.{Memo, QueryDef, Tables => T}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -429,46 +429,24 @@ object Multimodal {
       |FROM ids LEFT JOIN cvc ON ids.doc_id = cvc.da
       |         LEFT JOIN dvd ON ids.doc_id = dvd.da
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    // memoized per (application, dir) — the dd16 rationale (r13 ADVICE
-    // #3): one cached decisions frame per dir instead of one per rep.
     // The PARTS are memoized one level lower (sharedParts) so a
     // full-suite run prices the tile→md5→bit-sum fingerprint build once
     // for mm07 AND dd17 (r15 verdict #1), not once per consumer.
-    mm07Cache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d",
-      admissionFromParts(sharedParts(s, d)))
+    mm07Memo(s, d)(admissionFromParts(sharedParts(s, d)))
   }
 
-  private val mm07Cache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val mm07Memo = Memo.slot[DataFrame]("multimodal.mm07")(_.unpersist())
 
-  /** The perceptual fingerprint build, memoized per (application, dir)
-    * and shared by mm07 and dd17 (r15 verdict #1 — previously each
-    * consumer rebuilt the tile→md5→bit-sum aggregate). The cached hash
-    * frame is one row per doc (doc_id + 1–2 longs) so it stays resident
-    * like the ss15 standing index; inserting a new dir for the same
-    * application unpersists any previous dir's frame (LRU-1 — Verify/
-    * Bench drive one dir per app, specs plant their own frames through
-    * [[perceptualParts]] which still owns its unpersist). */
-  private val partsCache =
-    scala.collection.concurrent.TrieMap.empty[String, PerceptualParts]
+  /** The perceptual fingerprint build, memoized and shared by mm07 and
+    * dd17 (r15 verdict #1 — previously each consumer rebuilt the
+    * tile→md5→bit-sum aggregate). The cached hash frame is one row per
+    * doc (doc_id + 1–2 longs) so it stays resident like the ss15
+    * standing index; specs plant their own frames through
+    * [[perceptualParts]], which still owns its unpersist. */
+  private val partsMemo = Memo.slot[PerceptualParts]("multimodal.parts")(_.hash.unpersist())
 
-  private[graft] def sharedParts(s: SparkSession, d: String): PerceptualParts = {
-    val app = s.sparkContext.applicationId
-    // synchronized: TrieMap.getOrElseUpdate may run the builder twice
-    // under concurrent first access, leaking the losing build's cached
-    // hash frame, and the LRU-1 eviction must be atomic with the insert
-    // (r16 ADVICE #1). The coarse lock is fine: builds are driver-side,
-    // rare (one per dir), and the sequential Verify/Bench drivers never
-    // contend — this closes the leak if queries ever run concurrently.
-    partsCache.synchronized {
-      partsCache.getOrElseUpdate(s"$app|$d", {
-        partsCache.keys.filter(_.startsWith(app + "|")).foreach { k =>
-          partsCache.remove(k).foreach(_.hash.unpersist())
-        }
-        perceptualParts(s, T.documents(s, d))
-      })
-    }
-  }
+  private[graft] def sharedParts(s: SparkSession, d: String): PerceptualParts =
+    partsMemo(s, d)(perceptualParts(s, T.documents(s, d)))
 
   /** The banded intermediates of mm07's dataflow, factored so mm07,
     * dd17 and the spec entry [[perceptualAdmission]] share one
@@ -699,12 +677,10 @@ object Multimodal {
       |FROM sides
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    dd17Cache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d",
-      consistencyFromParts(sharedParts(s, d)))
+    dd17Memo(s, d)(consistencyFromParts(sharedParts(s, d)))
   }
 
-  private val dd17Cache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val dd17Memo = Memo.slot[DataFrame]("multimodal.dd17")(_.unpersist())
 
   /** dd17's dataflow over an arbitrary (doc_id, text) frame — factored
     * (the perceptualParts precedent) so the spec can plant the

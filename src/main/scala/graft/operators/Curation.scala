@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables => T}
+import graft.{Memo, QueryDef, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -383,19 +383,12 @@ object Curation {
       |  (COALESCE(hits.nsh, 0) = 0) AS admitted
       |FROM ids LEFT JOIN hits ON ids.doc_id = hits.doc_id
       |ORDER BY ids.doc_id""".stripMargin) { (s, d) =>
-    // decisions memoized per (application, dir) — the dd16 rationale:
-    // one small cached ledger per dir instead of a fresh storage entry
-    // per bench rep. synchronized + LRU-1 eviction via MemoLru (r17
-    // verdict #6 / ADVICE #2 — the sharedParts/st19 discipline): a
-    // concurrent double-build would leak the losing build's cached
-    // ledger, and a new dir for the same app unpersists the previous
-    // dir's frame.
-    graft.MemoLru.getOrBuild(dd18Cache, s.sparkContext.applicationId, d)(
-      _.unpersist())(decontaminationDelta(s, T.documents(s, d)))
+    // decisions memoized: one small cached ledger per dir instead of a
+    // fresh storage entry per bench rep
+    dd18Memo(s, d)(decontaminationDelta(s, T.documents(s, d)))
   }
 
-  private val dd18Cache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val dd18Memo = Memo.slot[DataFrame]("curation.dd18")(_.unpersist())
 
   /** dd18's dataflow over an arbitrary (doc_id, text) frame — factored
     * (the incrementalBandIndex precedent) so the spec can plant a

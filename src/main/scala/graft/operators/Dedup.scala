@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables => T}
+import graft.{Memo, QueryDef, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,19 +39,14 @@ object Dedup {
     * collision affects both engines identically — parity is exact by
     * construction, not by collision-freedom.
     *
-    * Cached per sf dir: dd02/dd03/dd04 all start from this table, and
+    * Memoized per sf dir: dd02/dd03/dd04 all start from this table, and
     * recomputing the explode+distinct+df-join per query would triple
     * the scan work (the cache is the "shingle inverted index" a real
     * pipeline would materialize once). */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val shingleMemo = Memo.slot[DataFrame]("dedup.shingles")(_.unpersist())
 
   private def shingles(s: SparkSession, d: String): DataFrame =
-    // key includes the application id: a dir-only key would hand a
-    // DataFrame bound to a stopped SparkContext to a fresh session
-    // (shinglesOf returns its result already cached + materialized)
-    shingleCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d",
-      shinglesOf(T.documents(s, d)))
+    shingleMemo(s, d)(shinglesOf(T.documents(s, d)))
 
   /** The shingle-index dataflow over an arbitrary (doc_id, text) frame —
     * factored so the PPJoin losslessness property test can drive random
@@ -142,8 +137,7 @@ object Dedup {
     * arrays (two hash joins + array_intersect — no second corpus-wide
     * self-join), so emitted jaccard values are identical to the
     * all-pairs form's and the DuckDB oracle stays the semantic spec. */
-  private val jacCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val jacMemo = Memo.slot[DataFrame]("dedup.jaccard")(_.unpersist())
 
   /** The prefix filter inside [[jaccardPairs]] makes the pair table
     * COMPLETE only for J ≥ this floor — an implicit contract a future
@@ -163,8 +157,7 @@ object Dedup {
   }
 
   private[graft] def jaccardPairs(s: SparkSession, d: String): DataFrame =
-    jacCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d",
-      jaccardPairsOf(shingles(s, d)).cache())
+    jacMemo(s, d)(jaccardPairsOf(shingles(s, d)).cache())
 
   /** The candidate-generation + verify dataflow over an arbitrary
     * shingle index — factored so the losslessness property test can run
@@ -180,7 +173,7 @@ object Dedup {
         .filter(col("rnk") <= col("n") - ceil(col("n") * lit(t)) + 1)
         .select("doc_id", "h", "rnk", "n")
       // length + positional filters (see the losslessness argument in
-      // the jacCache doc above); the 1e-9 slack keeps binary-float t
+      // the jacMemo doc above); the 1e-9 slack keeps binary-float t
       // from ever round-pruning a boundary pair
       val posBound = lit(1.0) +
         least(col("a.n") - col("a.rnk"), col("b.n") - col("b.rnk"))
@@ -465,14 +458,14 @@ object Dedup {
        |GROUP BY a
        |ORDER BY doc_id""".stripMargin) { (s, d) => dupClusters(s, d) }
 
-  /** dd05's fixpoint, memoized per (application, dir): dd08's survivor
-    * selection starts from the same cluster labels, and the propagation
-    * loop is the expensive part. */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** dd05's fixpoint, memoized: dd08's survivor selection starts from
+    * the same cluster labels, and the propagation loop is the expensive
+    * part. Nothing to release: the context cleaner frees a local
+    * checkpoint's blocks once the frame is unreachable. */
+  private val clusterMemo = Memo.slot[DataFrame]("dedup.clusters")(_ => ())
 
   def dupClusters(s: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d",
+    clusterMemo(s, d)(
       // localCheckpoint (not cache): the fixpoint's lineage is rounds of
       // unioned joins, and every DOWNSTREAM query re-plans that whole
       // tree through a mere cache — the checkpoint replaces it with the
@@ -1072,21 +1065,14 @@ object Dedup {
       |FROM ids LEFT JOIN cvc ON ids.doc_id = cvc.da
       |         LEFT JOIN dvd ON ids.doc_id = dvd.da
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    // decisions memoized per (application, dir) like the offline model
-    // builds (r13 ADVICE #3): the output is one small cached row per
-    // delta doc, but re-running the dataflow per bench rep left a fresh
-    // storage entry alive for the JVM each time — exactly the
+    // decisions memoized (r13 ADVICE #3): the output is one small cached
+    // row per delta doc, but re-running the dataflow per bench rep left
+    // a fresh storage entry alive for the JVM each time — exactly the
     // accumulated suite-JVM state the r12 streaming adjudication blamed
-    // synchronized + LRU-1 eviction via MemoLru (r17 verdict #6 — the
-    // sharedParts/st19 discipline, latent here since r13): a concurrent
-    // double-build would leak the losing build's cached ledger, and a
-    // new dir for the same app unpersists the previous dir's frame.
-    graft.MemoLru.getOrBuild(dd16Cache, s.sparkContext.applicationId, d)(
-      _.unpersist())(incrementalBandIndex(s, T.documents(s, d)))
+    dd16Memo(s, d)(incrementalBandIndex(s, T.documents(s, d)))
   }
 
-  private val dd16Cache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val dd16Memo = Memo.slot[DataFrame]("dedup.dd16")(_.unpersist())
 
   /** dd16's dataflow over an arbitrary (doc_id, text) frame — factored
     * (the editDistNeardup/shinglesOf precedent) so the spec can drive a

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables => T}
+import graft.{Memo, QueryDef, Tables => T}
 import graft.ml.{LdaPipeline, Vectorize}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,14 +95,12 @@ object MlQueries {
 
   /** ml01-ml03 share one fitted model per sf dir (train once, query many
     * — the production shape; also keeps Verify/Bench from re-training). */
-  private val fitCache =
-    scala.collection.concurrent.TrieMap.empty[String, LdaPipeline.Fitted]
+  private val fitMemo = Memo.slot[LdaPipeline.Fitted]("ml.lda_fit")(_.release())
 
-  /** ml03's derived stats, memoized per (application, dir) like the fit
-    * they are pure functions of: (corpus size, active terms,
-    * log-likelihood, total tokens). See the ml03 scaladoc. */
-  private val ml03StatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Double, Long)]
+  /** ml03's derived stats, memoized like the fit they are pure functions
+    * of: (corpus size, active terms, log-likelihood, total tokens). See
+    * the ml03 scaladoc. */
+  private val ml03StatsMemo = Memo.slot[(Long, Long, Double, Long)]("ml.ml03_stats")(_ => ())
 
   /** Telemetry sink for ml03's most recent COLD stats computation:
     * (stage, seconds) in execution order. Bench folds this into its
@@ -112,13 +110,12 @@ object MlQueries {
   @volatile var ml03StageTimes: Option[Seq[(String, Double)]] = None
 
   private def ldaFit(s: org.apache.spark.sql.SparkSession, d: String) =
-    // application id in the key: see Dedup.shingleCache
-    fitCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d", {
+    fitMemo(s, d) {
       val tokens = T.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("tokens"))
       LdaPipeline.train(s, tokens,
         LdaPipeline.Params(k = 5, maxIterations = 15, algorithm = "online", seed = 42L))
-    })
+    }
 
   /** Shared by ml01/ml04: one row per topic from a fitted model's
     * describeTopics, in the ml03/ss07 tolerance-boolean shape. The
@@ -200,7 +197,7 @@ object MlQueries {
     * values; DuckDB cannot fit an LDA, so the booleans — not the raw
     * avg_ll — are the compared columns.
     *
-    * The stats are memoized per (application, dir) alongside the fit
+    * The stats are memoized alongside the fit
     * (r13 verdict #2): `model.logLikelihood(corpus)` is a full
     * variational pass over the corpus but a PURE function of the frozen
     * fitted model, so re-running it per bench rep only re-measures the
@@ -231,25 +228,24 @@ object MlQueries {
       s"vocab hit the ${LdaPipeline.Params().vocabSize} cap; ml03's " +
         "uncapped-count oracle no longer matches the fitted pipeline")
     val (corpusSize, activeTerms, ll, totalTokens) =
-      ml03StatsCache.getOrElseUpdate(
-        s"${s.sparkContext.applicationId}|$d", {
-          val stages = Seq.newBuilder[(String, Double)]
-          def timed[A](name: String)(f: => A): A = {
-            val t0 = System.nanoTime()
-            val r = f
-            stages += name -> (System.nanoTime() - t0) / 1e9
-            r
-          }
-          val cs = timed("corpus_count")(fitted.corpus.count())
-          val at = timed("active_terms")(
-            Vectorize.activeTermCount(fitted.corpus))
-          val l = timed("log_likelihood")(
-            fitted.model.logLikelihood(fitted.corpus))
-          val tt = timed("total_tokens")(T.documents(s, d)
-            .agg(sum(size(split(col("text"), " ")))).head().getLong(0))
-          ml03StageTimes = Some(stages.result())
-          (cs, at, l, tt)
-        })
+      ml03StatsMemo(s, d) {
+        val stages = Seq.newBuilder[(String, Double)]
+        def timed[A](name: String)(f: => A): A = {
+          val t0 = System.nanoTime()
+          val r = f
+          stages += name -> (System.nanoTime() - t0) / 1e9
+          r
+        }
+        val cs = timed("corpus_count")(fitted.corpus.count())
+        val at = timed("active_terms")(
+          Vectorize.activeTermCount(fitted.corpus))
+        val l = timed("log_likelihood")(
+          fitted.model.logLikelihood(fitted.corpus))
+        val tt = timed("total_tokens")(T.documents(s, d)
+          .agg(sum(size(split(col("text"), " ")))).head().getLong(0))
+        ml03StageTimes = Some(stages.result())
+        (cs, at, l, tt)
+      }
     val avgLl = ll / corpusSize
     val vocabSize = fitted.vocab.length.toLong
     val bound = -100.0 * (totalTokens.toDouble / corpusSize) * math.log(vocabSize + 1.0)
@@ -488,16 +484,15 @@ object MlQueries {
   }
 
   /** One KMeans fit per sf dir (train once, query many — mirrors
-    * [[fitCache]]; Bench's repeat runs must not re-train). */
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.ml.clustering.KMeansModel]
+    * [[fitMemo]]; Bench's repeat runs must not re-train). */
+  private val kmMemo = Memo.slot[org.apache.spark.ml.clustering.KMeansModel]("ml.kmeans")(_ => ())
 
   /** Shared by ml08/ml09: the seeded k=8 KMeans fit over [[ldaFit]]'s
     * cached TF·IDF corpus. */
   private def kmFit(s: org.apache.spark.sql.SparkSession, d: String) = {
     import org.apache.spark.ml.clustering.KMeans
     val fitted = ldaFit(s, d)
-    kmCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d",
+    kmMemo(s, d)(
       new KMeans().setK(8).setSeed(42L).setMaxIter(20)
         .setFeaturesCol("features").setPredictionCol("cluster")
         .fit(fitted.corpus))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables => T}
+import graft.{Memo, QueryDef, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -200,23 +200,24 @@ object Similarity {
       .orderBy("qid")
   }
 
-  /** The coarse quantizer is fit once per (application, dir) — the IVF
-    * layout is built offline and queried many times in production, and
-    * re-fitting per invocation dominated ss04's bench time. */
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.ml.clustering.KMeansModel]
+  /** The coarse quantizer is fit once per dir — the IVF layout is built
+    * offline and queried many times in production, and re-fitting per
+    * invocation dominated ss04's bench time. Models are driver-side
+    * (~4 KB of centroids each), so there is nothing to release. */
+  private[graft] val coarseMemo = Memo.slot[org.apache.spark.ml.clustering.KMeansModel](
+    "similarity.coarse")(_ => ())
 
   /** The coarse quantizer model alone (shared by ss04's IVF and ss09's
     * IVFPQ — ONE cell layout, two scan strategies over it). */
-  private def coarseModel(s: org.apache.spark.sql.SparkSession, d: String) = {
+  private[graft] def coarseModel(s: org.apache.spark.sql.SparkSession, d: String) = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    kmCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d", {
+    coarseMemo(s, d) {
       val e = T.embeddings(s, d)
         .withColumn("v", array_to_vector(col("embedding")))
       new KMeans().setK(8).setSeed(42L).setFeaturesCol("v")
         .setPredictionCol("cell").fit(e)
-    })
+    }
   }
 
   def ivf(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
@@ -650,27 +651,14 @@ object Similarity {
     simhashDuckSql(4, withRBits = true))(simhashNeardupFn(4, withRBits = true))
 
   /** PQ codebooks: per-subspace k-means (M=4 subspaces × 16 dims, k=16
-    * codes each), fit once per (application, dir) like the IVF coarse
-    * quantizer — codebooks are built offline and reused for every
-    * query in production. Total codebook size is 4·16·16 floats (~4 KB)
-    * — broadcastable at ANY corpus scale; the encoded corpus is 4 bytes
+    * codes each), fit once per dir like the IVF coarse quantizer —
+    * codebooks are built offline and reused for every query in
+    * production. Total codebook size is 4·16·16 floats (~4 KB) —
+    * broadcastable at ANY corpus scale; the encoded corpus is 4 bytes
     * per vector instead of 256 (the 64× compression that makes
-    * billion-vector ANN fit in RAM).
-    *
-    * Retention (this note covers kmCache above too): entries live for
-    * the session; each holds M=4 (resp. 1) local KMeansModels
-    * whose payload is the ~4 KB of codebook centroids — with one entry
-    * per (application, sf dir) benchmarked, a whole bench sweep retains
-    * a few dozen KB on the driver. Bounded by the handful of dirs a run
-    * touches, so no eviction path; [[clearModelCaches]] exists for specs
-    * that must force a re-fit. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[org.apache.spark.ml.clustering.KMeansModel]]
-
-  /** Test hook: drop the memoized k-means models so the next call
-    * re-fits (the ss08/ss09 seed-determinism specs would otherwise just
-    * read back the cached model objects — a vacuous assertion). */
-  private[graft] def clearModelCaches(): Unit = { pqCache.clear(); kmCache.clear() }
+    * billion-vector ANN fit in RAM). */
+  private[graft] val pqMemo = Memo.slot[Seq[org.apache.spark.ml.clustering.KMeansModel]](
+    "similarity.pq")(_ => ())
 
   private val pqM = 4      // subspaces
   private val pqSub = 16   // dims per subspace
@@ -679,7 +667,7 @@ object Similarity {
   private def pqModels(s: org.apache.spark.sql.SparkSession, d: String) = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    pqCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d", {
+    pqMemo(s, d) {
       val e = T.embeddings(s, d)
       (0 until pqM).map { m =>
         val sub = e.withColumn(s"v$m",
@@ -687,7 +675,7 @@ object Similarity {
         new KMeans().setK(pqK).setSeed(42L + m).setFeaturesCol(s"v$m")
           .setPredictionCol(s"code$m").fit(sub)
       }
-    })
+    }
   }
 
   /** ss08 — product quantization with asymmetric distance (the
@@ -1506,14 +1494,18 @@ object Similarity {
     * with the corpus). At the graded scales (sf0.01 N=500, sf0.1
     * N=2000) k remains 8 and the SHARED coarse model is reused
     * unchanged (one clustering, three consumers — and bit-identical
-    * dd14 results there). */
+    * dd14 results there). k is a function of the dir's row count, so
+    * the dir alone keys the memo. */
+  private val semCellMemo = Memo.slot[org.apache.spark.ml.clustering.KMeansModel](
+    "similarity.coarse_sem")(_ => ())
+
   private def semCellModel(s: org.apache.spark.sql.SparkSession, d: String) = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val n = T.embeddings(s, d).count()
     val k = math.max(8L, n / 250).toInt
     if (k == 8) coarseModel(s, d)
-    else kmCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d|sem$k", {
+    else semCellMemo(s, d) {
       val e = T.embeddings(s, d)
         .withColumn("v", array_to_vector(col("embedding")))
       // the quantizer only PARTITIONS the space for candidate generation
@@ -1522,7 +1514,7 @@ object Similarity {
       // the first adaptive-k sf1 sample)
       new KMeans().setK(k).setSeed(42L).setMaxIter(5).setFeaturesCol("v")
         .setPredictionCol("cell").fit(e)
-    })
+    }
   }
 
   private[graft] def semDedupParts(s: org.apache.spark.sql.SparkSession, d: String):
@@ -1591,11 +1583,6 @@ object Similarity {
       .toDF("n_docs", "partition_ok", "cell_minima_kept",
         "drops_within_pairs", "drops_consistent")
   }
-
-  /** Test hook alongside clearModelCaches — dd14's spec re-derives the
-    * drop set driver-side and needs the same cell assignment. */
-  private[graft] def coarseModelFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    coarseModel(s, d)
 
   /** ss11 — kNN label probe: the standard embedding-quality evaluation
     * (a k-nearest-neighbor classifier over the frozen embeddings; the
@@ -1802,15 +1789,12 @@ object Similarity {
     * ONLY on the standing corpus (vec_id % 5 <> 0) — the frozen index
     * epoch a daily delta is admitted against. [[coarseModel]]/[[pqModels]]
     * fit on the FULL table and so cannot play a standing index (the
-    * epoch must not have seen the delta). Memoized per (application,
-    * dir) like every other offline-built model here. */
-  private val epochCache = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.ml.clustering.KMeansModel,
-      Seq[org.apache.spark.ml.clustering.KMeansModel])]
+    * epoch must not have seen the delta). */
+  private val epochMemo = Memo.slot[(org.apache.spark.ml.clustering.KMeansModel,
+    Seq[org.apache.spark.ml.clustering.KMeansModel])]("similarity.epoch")(_ => ())
 
   private[graft] def epochModels(s: SparkSession, d: String) =
-    epochCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d",
-      fitEpochModels(T.embeddings(s, d).filter(col("vec_id") % 5 =!= 0)))
+    epochMemo(s, d)(fitEpochModels(T.embeddings(s, d).filter(col("vec_id") % 5 =!= 0)))
 
   /** Fit a coarse quantizer + per-subspace PQ codebooks on an arbitrary
     * corpus frame (factored so the ss15 spec can drive a planted
@@ -1934,16 +1918,13 @@ object Similarity {
       |  TRUE AS adc_cos_in_range, TRUE AS accounting_ok
       |FROM embeddings WHERE vec_id % 5 = 0
       |ORDER BY vec_id""".stripMargin) { (s, d) =>
-    // decisions memoized per (application, dir) — the dd16 rationale
-    // (r13 ADVICE #3): one cached frame per dir instead of one per rep
-    ss15Cache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d", {
+    ss15Memo(s, d) {
       val (km, pq) = epochModels(s, d)
       incrementalIvfpqIndex(s, T.embeddings(s, d), km, pq)._1
-    })
+    }
   }
 
-  private val ss15Cache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val ss15Memo = Memo.slot[DataFrame]("similarity.ss15")(_.unpersist())
 
   /** The standing IVFPQ index frame — (nid, cell, code0..M-1, recon,
     * rnorm), one row per corpus vector, derived ONLY through the epoch's
@@ -1969,22 +1950,21 @@ object Similarity {
       .withColumn("rnorm", sqrt(expr(dotExpr.format("recon", "recon"))))
   }
 
-  /** The standing index for the graded dir, memoized per (application,
-    * dir) and kept cached like the epoch models it derives from: at
-    * 100 TB this is yesterday's bucketed table — standing state a
-    * streaming admission query probes, not per-run work. One small
-    * cached frame per dir (index rows only, no corpus floats). */
-  private val standingIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** The standing index for the graded dir, memoized and kept cached
+    * like the epoch models it derives from: at 100 TB this is
+    * yesterday's bucketed table — standing state a streaming admission
+    * query probes, not per-run work. One small cached frame per dir
+    * (index rows only, no corpus floats). */
+  private val standingIdxMemo = Memo.slot[DataFrame]("similarity.standing_ivfpq")(_.unpersist())
 
   private[graft] def standingIvfpqIndex(s: SparkSession, d: String): DataFrame =
-    standingIdxCache.getOrElseUpdate(s"${s.sparkContext.applicationId}|$d", {
+    standingIdxMemo(s, d) {
       val (km, pq) = epochModels(s, d)
       val idx = ivfpqIndexFrame(km, pq,
         T.widened(T.embeddings(s, d).filter(col("vec_id") % 5 =!= 0), T.DenseKernelFloor)).cache()
       idx.count()
       idx
-    })
+    }
 
   /** st20's admission kernel, shared by the stream and its batch twin
     * (the spec pins their equality): per delta vector, ONE map-only

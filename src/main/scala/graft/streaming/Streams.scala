@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{GraftSession, QueryDef, Tables => T}
+import graft.{GraftSession, Memo, QueryDef, Tables => T}
 import graft.functions.ExactAgg._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -1349,32 +1349,15 @@ object Streams {
     * entry), `hinted` is what the stream joins against. */
   private[graft] case class St19Index(mat: DataFrame, hinted: DataFrame, r: Int)
 
-  /** st19's standing index memoized per (application, dir) — the
-    * standingIvfpqIndex idiom (r15 ADVICE #1): the persisted index
-    * frame is standing state, so repeated bench passes / parity runs
-    * reuse ONE materialized copy instead of accumulating a fresh
-    * MEMORY_AND_DISK frame per run. Inserting a new dir for the same
-    * app unpersists the previous dir's frame (LRU-1 — one dir drives a
-    * Verify/Bench app; specs plant frames through [[st19StaticIndex]]
-    * directly and own their lifecycle). */
-  private val st19IdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, St19Index]
+  /** st19's standing index, memoized (r15 ADVICE #1): the persisted
+    * index frame is standing state, so repeated bench passes / parity
+    * runs reuse ONE materialized copy instead of accumulating a fresh
+    * MEMORY_AND_DISK frame per run. Specs plant frames through
+    * [[st19StaticIndex]] directly and own their lifecycle. */
+  private val st19IdxMemo = Memo.slot[St19Index]("streams.st19_index")(_.mat.unpersist())
 
-  private[graft] def st19StandingIndex(s: SparkSession, d: String): St19Index = {
-    val app = s.sparkContext.applicationId
-    // synchronized (r16 ADVICE #1, the sharedParts twin): the builder
-    // persists a frame, so a concurrent double-build would leak the
-    // losing copy, and the LRU-1 eviction must be atomic with the
-    // insert; sequential drivers never contend on this coarse lock
-    st19IdxCache.synchronized {
-      st19IdxCache.getOrElseUpdate(s"$app|$d", {
-        st19IdxCache.keys.filter(_.startsWith(app + "|")).foreach { k =>
-          st19IdxCache.remove(k).foreach(_.mat.unpersist())
-        }
-        st19StaticIndex(s, T.embeddings(s, d))
-      })
-    }
-  }
+  private[graft] def st19StandingIndex(s: SparkSession, d: String): St19Index =
+    st19IdxMemo(s, d)(st19StaticIndex(s, T.embeddings(s, d)))
 
   /** st19 — streaming embedding near-dup admission: the embedding-side
     * twin of st14 (text MinHash) and the ingestion-time shape of dd07's
@@ -1505,10 +1488,9 @@ object Streams {
     val s = GraftSession.scoped(s0, streamParts(s0, d))
     Sim.regDot(s)
     val (km, pq) = Sim.epochModels(s, d)
-    // the standing index: memoized + cached per (application, dir) and
-    // MATERIALIZED before the stream starts — at 100 TB it is
-    // yesterday's bucketed table, standing state the micro-batches
-    // probe, not per-query work
+    // the standing index: memoized, cached and MATERIALIZED before the
+    // stream starts — at 100 TB it is yesterday's bucketed table,
+    // standing state the micro-batches probe, not per-query work
     val index = Sim.standingIvfpqIndex(s, d)
     val schema = graft.Tables.fileSchema(s, s"$d/embeddings.parquet")
     val stream = s.readStream.schema(schema)
@@ -1625,15 +1607,10 @@ object Streams {
     } finally corp.unpersist()
   }
 
-  private val st21IdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, St21Index]
+  private val st21IdxMemo = Memo.slot[St21Index]("streams.st21_index")(_.mat.unpersist())
 
-  /** st21's standing index memoized per (application, dir) — the
-    * MemoLru discipline (one materialized copy per dir, LRU-1). */
   private[graft] def st21StandingIndex(s: SparkSession, d: String): St21Index =
-    graft.MemoLru.getOrBuild(st21IdxCache, s.sparkContext.applicationId, d)(
-      _.mat.unpersist())(
-      st21StaticIndex(s, T.documents(s, d), streamPartsValue(s, d)))
+    st21IdxMemo(s, d)(st21StaticIndex(s, T.documents(s, d), streamPartsValue(s, d)))
 
   /** st21's per-batch ledger over an arbitrary delta frame (factored
     * for the planted spec and the plan lock): frames left-join the

@@ -109,27 +109,6 @@ class CurationSpec extends AnyFunSuite {
       byId(shortD).getAs[Long]("n_shared_grams") == 0L)
   }
 
-  test("dd18/dd16 memo discipline: MemoLru evicts the previous dir atomically (r17 #6)") {
-    // the dd16/dd18 ledgers memoize through MemoLru; this pins both
-    // directions of the LRU-1 contract the sharedParts/st19 memos got in
-    // r16: a memo hit never rebuilds or evicts, a NEW dir for the same
-    // application releases the previous dir's artifact (and only it)
-    val cache = scala.collection.concurrent.TrieMap.empty[String, String]
-    var evicted = List.empty[String]
-    var builds = 0
-    def build(v: String): String = { builds += 1; v }
-    assert(MemoLru.getOrBuild(cache, "app", "dirA")(evicted ::= _)(build("A")) == "A")
-    // same dir: memo hit — no rebuild, no eviction
-    assert(MemoLru.getOrBuild(cache, "app", "dirA")(evicted ::= _)(build("A2")) == "A")
-    assert(builds == 1 && evicted.isEmpty)
-    // a different application's entry is untouched by app-scoped eviction
-    assert(MemoLru.getOrBuild(cache, "other", "dirA")(evicted ::= _)(build("O")) == "O")
-    // new dir, same app: previous dir's artifact evicted atomically
-    assert(MemoLru.getOrBuild(cache, "app", "dirB")(evicted ::= _)(build("B")) == "B")
-    assert(evicted == List("A"))
-    assert(cache.keySet == Set("app|dirB", "other|dirA"))
-  }
-
   test("ta08: repetition ratios are well-formed") {
     run("ta08_repetition_profile").collect().foreach { r =>
       val nGrams = r.getAs[Long]("n_grams")

@@ -108,7 +108,7 @@ class StorageSimilaritySpec extends AnyFunSuite {
     // same model objects and the assertion is vacuous), and compare the
     // full IVFPQ ranking — scores included — not just gate booleans
     val before = operators.Similarity.ivfpq(spark, sf).collect().toSeq
-    operators.Similarity.clearModelCaches()
+    Memo.clear(operators.Similarity.coarseMemo, operators.Similarity.pqMemo)
     val after = operators.Similarity.ivfpq(spark, sf).collect().toSeq
     assert(before == after, "seeded k-means re-fit must reproduce the IVFPQ ranking")
     assert(SparkEntry.queries("ss08_pq_adc")(spark, sf).head() == row)
@@ -261,7 +261,7 @@ class StorageSimilaritySpec extends AnyFunSuite {
     assert(gotDropped == expectDropped,
       s"engine drop set ${gotDropped.size} != brute-force ${expectDropped.size}")
     // priority really is the centroid cosine the paper keys on
-    val km = operators.Similarity.coarseModelFor(spark, sf)
+    val km = operators.Similarity.coarseModel(spark, sf)
     val cents = km.clusterCenters.map(_.toArray)
     scored.take(50).foreach { case (cell, _, e, prio) =>
       val c = cents(cell)
