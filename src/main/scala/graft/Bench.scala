@@ -1,4 +1,5 @@
 package graft
+import graft.obs.QueryProfile
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
@@ -9,16 +10,28 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** Iteration-telemetry accessors KEYED by query name: only a query
-    * listed here may have its `<name>:iter_median` pin judged on
-    * iteration times (r13 ADVICE #1 — the keying lives in one place so
-    * BenchGuardSpec can pin that a foreign query's :iter_median pin
-    * never reads another query's telemetry). ml06 joined in r15
-    * (r14 verdict #3: online LDA had no decomposing telemetry). */
-  private[graft] val iterTelemetry: Map[String, () => Option[Seq[Double]]] =
-    Map(
-      "ml04_lda_em_train" -> (() => operators.MlQueries.ml04IterTimes),
-      "ml06_lda_online_train" -> (() => operators.MlQueries.ml06IterTimes))
+  /** One successful timed run: its wall and the profile captured
+    * around it. */
+  private[graft] final case class Sample(secs: Double, profile: QueryProfile)
+
+  /** The best sample after one more run. A failed run (None) never
+    * becomes best, however fast it failed; a tie keeps the earlier run. */
+  private[graft] def foldBest(best: Sample, run: Option[Sample]): Sample =
+    run.filter(_.secs < best.secs).getOrElse(best)
+
+  /** Queries judged and priced on their iteration series: only a query
+    * named here may have its `<name>:iter_median` pin judged on
+    * iteration times (r13 ADVICE #1 — BenchGuardSpec pins that a
+    * foreign query's :iter_median pin never reads another query's
+    * telemetry). ml06 joined in r15 (r14 verdict #3: online LDA had no
+    * decomposing telemetry). */
+  private[graft] val iterPriced = Set("ml04_lda_em_train", "ml06_lda_online_train")
+
+  /** A run's iteration series: ml04's recorded EM iteration times or
+    * the walls of ml06's online-fit jobs; None when the run has none. */
+  private[graft] def iterTimes(p: QueryProfile): Option[Seq[Double]] =
+    Some(p.walls(operators.MlQueries.EmIteration) ++
+      p.jobWalls(ml.LdaPipeline.OnlineFit)).filter(_.nonEmpty)
 
   /** The per-query spike decision, extracted pure so BenchGuardSpec can
     * pin BOTH directions of every guard instead of waiting for a live
@@ -36,9 +49,9 @@ object Bench {
     *   most recent fit's iteration times instead of wall time — wall
     *   spread can't trigger spurious heavy retries, a real 1.5×
     *   per-iteration regression still trips (floor 0.02 s,
-    *   per-iteration scale). The telemetry is keyed via
-    *   [[iterTelemetry]], and when it is absent (broken accessor,
-    *   filtered run) the decision FALLS BACK to the wall pin instead of
+    *   per-iteration scale). Only [[iterPriced]] queries are judged
+    *   this way, and when the series is absent (the run recorded
+    *   none) the decision FALLS BACK to the wall pin instead of
     *   silently granting blanket immunity (r13 ADVICE #1).
     * - A `<name>:cold` pin exempts the first run of a memoized query
     *   (r13 verdict #3): dd16/ss15/mm07 pin their memo-warm minima, so
@@ -54,7 +67,7 @@ object Bench {
     if (!pinsActive) return None
     val iterPin = expected.get(name + ":iter_median")
     val iterMed =
-      if (iterTelemetry.contains(name)) iterTimes.map(median) else None
+      if (iterPriced(name)) iterTimes.map(median) else None
     (iterPin, iterMed) match {
       case (Some(expMed), Some(m)) =>
         if (m > 1.5 * expMed && m - expMed > 0.02) Some(expMed) else None
@@ -82,24 +95,20 @@ object Bench {
     * max(0, best − Σiters). Pricing can only REMOVE contention: the
     * result is capped at the measured best, so a clean run's headline
     * is unchanged and a priced value never claims speed that wasn't
-    * measured. Only queries keyed in [[iterTelemetry]] are priced. */
+    * measured. Only [[iterPriced]] queries are priced. */
   private[graft] def pricedValue(name: String, best: Double,
       iterTimes: Option[Seq[Double]]): Double =
-    if (!iterTelemetry.contains(name)) best
+    if (!iterPriced(name)) best
     else iterTimes.filter(_.nonEmpty).fold(best) { ts =>
       math.min(best, median(ts) * ts.size + math.max(0.0, best - ts.sum))
     }
 
-  /** One-time build stages KEYED by query name (r17 verdict #2): q39
-    * (bucketed CTAS × 2) and q70 (z-order layout write) build a layout
-    * ONCE per session inside their first timed run and publish its
-    * per-stage walls. Only these queries may have a build priced out of
-    * the headline; ml03's stage telemetry stays out — its stats passes
-    * run every invocation, they are not one-time builds. */
-  private[graft] val buildStageTelemetry: Map[String, () => Option[Seq[(String, Double)]]] =
-    Map(
-      "q39_bucketed_join" -> (() => operators.Storage.q39StageTimes),
-      "q70_zorder_clustering" -> (() => operators.Storage.q70StageTimes))
+  /** Queries with a one-time build priced out of a cold-only minimum
+    * (r17 verdict #2): q39 (bucketed CTAS × 2) and q70 (z-order layout
+    * write) build a layout inside their first timed run, each stage a
+    * phase of that run's profile. ml03's stats phases stay out — they
+    * run on every cold invocation, they are not one-time builds. */
+  private[graft] val buildPriced = Set("q39_bucketed_join", "q70_zorder_clustering")
 
   /** Price a one-time build stage out of a cold-only sample (r17
     * verdict #2 — pricedValue's discipline extended to build stages):
@@ -107,13 +116,13 @@ object Bench {
     * build-inclusive first run (single sample under a drained repeat
     * budget, or warm repeats all contended), the headline would carry
     * the build; its steady-state cost is the remainder of the cold wall
-    * after the published build stages. Pricing can only REMOVE the
+    * after the first run's phases. Pricing can only REMOVE the
     * build: the result is capped at the measured best (a warm-min clean
     * pass is unchanged because best < first already excludes the build)
     * and floored at 0. Substitutions are published in `priced`. */
   private[graft] def buildPricedValue(name: String, first: Double,
       best: Double, stages: Option[Seq[(String, Double)]]): Double =
-    if (!buildStageTelemetry.contains(name) || best < first) best
+    if (!buildPriced(name) || best < first) best
     else stages.filter(_.nonEmpty).fold(best) { ts =>
       math.min(best, math.max(0.0, best - ts.map(_._2).sum))
     }
@@ -184,6 +193,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val reps = GraftSession.positiveInt("SPARK_GRAFT_BENCH_REPS", 3)
     val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT + codegen + parquet reader init otherwise land
@@ -245,18 +255,21 @@ object Bench {
     // note at the JSON assembly below), with the raw first-run sum — the
     // cost of one cold pass, shared cached builds attributed to the
     // first query of their family — kept alongside as `first_run_sum`.
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // noop write materializes every output row (projections, sorts,
-      // UDFs) without side effects; a bare count() would let Catalyst
-      // prune all projection work and time only the scan
-      val ok = guarded("bench", name, "FAILED") {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // one timed run: its wall, and a sample only when it succeeded
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[Sample]) = {
+      val ((secs, ok), profile) = QueryProfile.capture(spark) {
+        val t0 = System.nanoTime()
+        // noop write materializes every output row (projections, sorts,
+        // UDFs) without side effects; a bare count() would let Catalyst
+        // prune all projection work and time only the scan
+        val ok = guarded("bench", name, "FAILED") {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
+        ((System.nanoTime() - t0) / 1e9, ok)
       }
       if (!ok && !failures.contains(name)) failures ::= name
-      (System.nanoTime() - t0) / 1e9
+      (secs, Option.when(ok)(Sample(secs, profile)))
     }
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // Heavy-fit protection (r4 verdict): queries at/over repeatThreshold
     // run once by design, which left the single heavy training exposed to
     // a load spike (r4 driver artifact: ml04 at 198 s vs 38.5 s clean,
@@ -318,41 +331,41 @@ object Bench {
     val repeatBudget = math.max(240.0, 1.85 * selected.size) // sec: global cap on extra-run time
     var repeatSpent = 0.0
     // mutable per-query record: the salvage pass below may fold better
-    // times (and their telemetry) into a query after the main loop
+    // runs into a query after the main loop. Each decision reads the
+    // profile of the run it judges: pricing the best run's, build
+    // pricing the first run's, the spike decision the latest run's.
     final class QRes(
         val name: String, val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        val first: Double, var best: Double, var runs: Int,
-        val loadBefore: Double, var loadAfter: Double, var stealSec: Double,
-        var bestIter: Option[Seq[Double]],
-        var salvageRuns: Int = 0, var salvageSkippedSteal: Boolean = false,
-        var salvageImproved: Boolean = false)
-    val results = selected.map { case (name, fn) =>
+        val first: Sample, val loadBefore: Double) {
+      var best, latest = first
+      var runs = 1
+      var salvageRuns = 0
+      var loadAfter, stealSec = 0.0
+      var salvageSkippedSteal, salvageImproved = false
+      // runs the query once more, folds the run in and returns its wall
+      def rerun(): Double = {
+        val (t, s) = once(name, fn)
+        runs += 1
+        best = foldBest(best, s)
+        s.foreach(latest = _)
+        t
+      }
+      def overPin: Option[Double] =
+        spikeDecision(name, best.secs, runs, expected, iterTimes(latest.profile), pinsActive)
+    }
+    // a query whose first run fails has no sample: it is reported only
+    // under `failures`, and not repeated
+    val results = selected.flatMap { case (name, fn) =>
       // per-query environment telemetry (r16 verdict #1b): loadavg and
       // steal time bracketing ALL of this query's runs, so a contended
       // sample is machine-adjudicable from the artifact alone instead
       // of needing same-day clean-pass forensics
       val loadBefore = loadavg()
       val stealBefore = stealJiffies()
-      val iterNow: () => Option[Seq[Double]] =
-        () => iterTelemetry.get(name).flatMap(_())
-      val first = once(name, fn)
-      var best = first
-      var runs = 1
-      // iteration-telemetry PROVENANCE (r17 ADVICE #3): snapshot the
-      // accessor (which always reflects the most recent fit) right
-      // after every run that holds the minimum, so pricing below uses
-      // the telemetry of the run that produced `best` — not whichever
-      // run happened to be last after a spike retry
-      var bestIter = iterNow()
-      if (!failures.contains(name)) {
-        var r = 1
-        while (r < reps && first < repeatThreshold && repeatSpent < repeatBudget) {
-          val t = once(name, fn)
-          repeatSpent += t
-          if (t < best) { best = t; bestIter = iterNow() }
-          r += 1
-          runs += 1
-        }
+      once(name, fn)._2.map { first =>
+        val r = new QRes(name, fn, first, loadBefore)
+        while (r.runs < reps && first.secs < repeatThreshold && repeatSpent < repeatBudget)
+          repeatSpent += r.rerun()
         // universal spike retry (see BENCH_EXPECT.json note above): EVERY
         // query now carries a pinned clean minimum, so any best-so-far
         // exceeding 1.5x its pin earns up to two budgeted retries.
@@ -368,32 +381,25 @@ object Bench {
         // The full decision (iter-median guard for ml04, :cold pins for
         // memoized queries) lives in spikeDecision above — pure, and
         // pinned both directions by BenchGuardSpec.
-        def spiked(bestSoFar: Double, runsSoFar: Int): Option[Double] =
-          spikeDecision(name, bestSoFar, runsSoFar, expected,
-            iterNow(), pinsActive)
         var spikeRetries = 0
-        var trip = spiked(best, runs)
+        var trip = r.overPin
         while (trip.isDefined && heavySpent < heavyBudget && spikeRetries < 2) {
           // log the EFFECTIVE pin the decision used (r14 ADVICE #4: a
           // :cold-decided retry used to print the warm wall pin — or
           // 0.00 s when only a :cold pin existed)
           System.err.println(
-            f"[bench] $name best run $best%.1f s over 1.5x its effective pin (${trip.get}%.2f s) - retrying (${spikeRetries + 1}/2)")
-          val t = once(name, fn)
-          heavySpent += t
+            f"[bench] $name best run ${r.best.secs}%.1f s over 1.5x its effective pin (${trip.get}%.2f s) - retrying (${spikeRetries + 1}/2)")
+          heavySpent += r.rerun()
           spikeRetries += 1
-          runs += 1
-          if (t < best) { best = t; bestIter = iterNow() }
-          trip = spiked(best, runs)
+          trip = r.overPin
         }
+        r.loadAfter = loadavg()
+        val stealAfter = stealJiffies()
+        r.stealSec =
+          if (stealBefore < 0 || stealAfter < 0) -1.0
+          else (stealAfter - stealBefore) / 100.0 // USER_HZ=100 jiffies/s
+        r
       }
-      val loadAfter = loadavg()
-      val stealAfter = stealJiffies()
-      val stealSec =
-        if (stealBefore < 0 || stealAfter < 0) -1.0
-        else (stealAfter - stealBefore) / 100.0 // USER_HZ=100 jiffies/s
-      new QRes(name, fn, first, best, runs, loadBefore, loadAfter,
-        stealSec, bestIter)
     }
     // ---- steal-aware salvage pass (r17 verdict #1) ----------------
     // Self-flagging (contended=true + per-query load/steal) adjudicates
@@ -406,14 +412,11 @@ object Bench {
     // attempts only run on a momentarily-quiet box, where a good sample
     // is actually obtainable. Probe sleeps count against the budget so
     // a permanently-stolen box bounds the whole pass at salvageBudget.
-    def overPinNow(r: QRes): Option[Double] =
-      spikeDecision(r.name, r.best, r.runs, expected,
-        iterTelemetry.get(r.name).flatMap(_()), pinsActive)
     val salvageBudget = math.max(120.0, 1.0 * selected.size) // sec
     var salvageSpent = 0.0
     val salvageCands = salvagePlan(
       results.filter(r => !failures.contains(r.name))
-        .flatMap(r => overPinNow(r).map(r.name -> _)))
+        .flatMap(r => r.overPin.map(r.name -> _)))
     val byName = results.map(r => r.name -> r).toMap
     if (salvageCands.nonEmpty)
       System.err.println(
@@ -423,7 +426,7 @@ object Bench {
     salvageCands.foreach { case (name, pin) =>
       val r = byName(name)
       var halted = false
-      while (!halted && overPinNow(r).isDefined && r.salvageRuns < 2 &&
+      while (!halted && r.overPin.isDefined && r.salvageRuns < 2 &&
           salvageSpent < salvageBudget) {
         // ~1 s steal probe before every attempt; up to 3 probes, then
         // skip this query (the box is visibly stolen right now — spend
@@ -442,26 +445,21 @@ object Bench {
           r.salvageSkippedSteal = true
           halted = true
         } else {
-          val t = once(name, r.fn)
-          salvageSpent += t
+          val before = r.best
+          salvageSpent += r.rerun()
           r.salvageRuns += 1
-          r.runs += 1
-          if (t < r.best) {
-            r.best = t
-            r.bestIter = iterTelemetry.get(name).flatMap(_())
-            r.salvageImproved = true
-          }
+          if (r.best ne before) r.salvageImproved = true
         }
       }
     }
-    val qs = results.map(r => s"\"" + r.name + "\":" + r.best)
+    val qs = results.map(r => s"\"" + r.name + "\":" + r.best.secs)
       .mkString("{", ",", "}")
     // per-query FIRST runs (r7 verdict item #1): a memoized query's cold
     // cost (dd05's fixpoint, ml01's fit, q39's bucketed-table build) is
     // visible only in its first run; publishing the full map makes cold
     // cost vs memo-hit auditable instead of only the aggregate
     // first_run_sum.
-    val firstRuns = results.map(r => s"\"" + r.name + "\":" + r.first)
+    val firstRuns = results.map(r => s"\"" + r.name + "\":" + r.first.secs)
       .mkString("{", ",", "}")
     // per-query RUN COUNTS + budget flag (r10 verdict item #4): when the
     // repeat budget drains mid-suite, the remaining queries' "de-noised"
@@ -489,18 +487,16 @@ object Bench {
       // (r17 verdict #2) removes a one-time layout build from a
       // cold-only minimum
       val p = math.min(
-        pricedValue(r.name, r.best, r.bestIter),
-        buildPricedValue(r.name, r.first, r.best,
-          buildStageTelemetry.get(r.name).flatMap(_())))
+        pricedValue(r.name, r.best.secs, iterTimes(r.best.profile)),
+        buildPricedValue(r.name, r.first.secs, r.best.secs,
+          Some(r.first.profile.phases)))
       // 10 ms materiality floor: float noise on a clean pass (Σiters a
       // hair under wall) must not publish a spurious substitution
-      if (r.best - p > 0.01) Some(r.name -> p) else None
+      if (r.best.secs - p > 0.01) Some(r.name -> p) else None
     }.toMap
-    val total =
-      if (results.isEmpty) 0.0
-      else results.map(r => pricedEntries.getOrElse(r.name, r.best)).sum
-    val totalWall = if (results.nonEmpty) results.map(_.best).sum else 0.0
-    val totalFirst = if (results.nonEmpty) results.map(_.first).sum else 0.0
+    val total = results.map(r => pricedEntries.getOrElse(r.name, r.best.secs)).sum
+    val totalWall = results.map(_.best.secs).sum
+    val totalFirst = results.map(_.first.secs).sum
     // cold-inclusive headline (r18 verdict #7): the de-noised `value`
     // excludes memoized standing builds (their warm minima enter the
     // sum; the cold build cost is visible only in first_runs), and the
@@ -511,16 +507,14 @@ object Bench {
     // exactly the set whose first run includes a standing build) priced
     // at its cold first run instead of its warm minimum. No pins file →
     // no :cold keys → cold_value == value.
-    val totalCold =
-      if (results.isEmpty) 0.0
-      else results.map(r =>
-        if (expected.contains(r.name + ":cold")) r.first
-        else pricedEntries.getOrElse(r.name, r.best)).sum
+    val totalCold = results.map(r =>
+      if (expected.contains(r.name + ":cold")) r.first.secs
+      else pricedEntries.getOrElse(r.name, r.best.secs)).sum
     // final over-pin census (r16 verdict #1c): re-run the spike decision
     // on each query's FINAL state (best after retries AND salvage,
     // actual run count, its own iteration telemetry) — exactly the
     // guard's last word
-    val overPin = results.count(r => overPinNow(r).isDefined)
+    val overPin = results.count(_.overPin.isDefined)
     val contended = contendedFlag(overPin, results.size, pinsActive)
     if (contended)
       System.err.println(
@@ -535,32 +529,31 @@ object Bench {
         "late queries may be single cold runs; see \"runs\" in the artifact")
     val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
     // iteration telemetry (ml04 EM; ml06 online — r14 verdict #3): the
-    // per-iteration training times of each guarded query's most recent
-    // fit, so a slow driver-environment sample decomposes into
-    // iterations × per-iter cost instead of needing forensics.
+    // iteration series of each priced query's latest run, so a slow
+    // driver-environment sample decomposes into iterations × per-iter
+    // cost instead of needing forensics.
     // Locale.ROOT formatting: f"$t%.3f" uses the JVM default locale and
     // would emit "0,123" under comma-decimal locales, corrupting the JSON
     def num(t: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))
-    val iterEntries = iterTelemetry.toSeq.sortBy(_._1)
-      .flatMap { case (q, get) =>
-        get().map(ts => "\"" + q + "\":[" + ts.map(num).mkString(",") + "]")
-      }
-    val iterTimes =
+    val iterEntries = results.filter(r => iterPriced(r.name)).flatMap { r =>
+      iterTimes(r.latest.profile).map(ts =>
+        "\"" + r.name + "\":[" + ts.map(num).mkString(",") + "]")
+    }
+    val iterJson =
       if (iterEntries.isEmpty) ""
       else iterEntries.mkString("\"iter_times\":{", ",", "},")
-    // stage telemetry: cold per-stage wall times so a slow first run
-    // self-adjudicates — ml03's stats passes (r13 verdict #2) and q39's
-    // bucketed-table build vs join (r14 verdict #4)
-    val stageSources: Seq[(String, Option[Seq[(String, Double)]])] =
-      ("ml03_lda_model_stats" -> operators.MlQueries.ml03StageTimes) +:
-        buildStageTelemetry.toSeq.sortBy(_._1).map { case (k, get) => k -> get() }
-    val stageEntries = stageSources.flatMap { case (q, tsOpt) =>
-      tsOpt.map(ts => "\"" + q + "\":{" + ts.map { case (k, v) =>
-        "\"" + k + "\":" + num(v)
-      }.mkString(",") + "}")
-    }
-    val stageTimes =
+    // stage telemetry: the first run's phase walls, so a slow first run
+    // self-adjudicates — ml03's stats passes (r13 verdict #2) and the
+    // q39/q70 layout builds (r14 verdict #4)
+    val stageEntries = results
+      .filter(r => buildPriced(r.name) || r.name == "ml03_lda_model_stats")
+      .filter(_.first.profile.phases.nonEmpty).map { r =>
+        "\"" + r.name + "\":{" + r.first.profile.phases.map { case (k, v) =>
+          "\"" + k + "\":" + num(v)
+        }.mkString(",") + "}"
+      }
+    val stageJson =
       if (stageEntries.isEmpty) ""
       else stageEntries.mkString("\"stage_times\":{", ",", "},")
     // priced substitutions (empty when no telemetry query was priced
@@ -598,7 +591,7 @@ object Bench {
       s""""$slot":{"builds":${c.builds},"hits":${c.hits},"evictions":${c.evictions}}"""
     }.mkString("\"memo\":{", ",", "},")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","value_wall":$totalWall,"first_run_sum":$totalFirst,"cold_value":$totalCold,"budget_exhausted":$budgetExhausted,"pins_active":$pinsActive,"contended":$contended,"over_pin":$overPin,"queries":$qs,"first_runs":$firstRuns,"runs":$runCounts,$pricedJson$loadJson$salvageJson$iterTimes$stageTimes$memoJson"sf":"$sfDir","failures":$fails,"protocol":"queries=min of up to $reps runs (repeats only when first<${repeatThreshold}s, global extra budget ${repeatBudget}s; ANY query retries up to twice when best>1.5x its BENCH_EXPECT.json pin — a :cold pin exempts a memoized query's first run, ml04/ml06 are judged on median iter time, and pin retries are disabled entirely when the sf dir is not the pins' _pin_dir (pins_active=false) — budget ${heavyBudget}s); after the main loop a steal-gated salvage pass re-runs still-over-pin queries cheapest-pin-first (up to 2 runs each, every attempt preceded by a ~1s zero-steal probe, budget ${salvageBudget}s incl. probe sleeps; per-candidate [runs,skipped_steal,improved] in salvage); value=de-noised sum of per-query minima with iter-telemetry queries priced at median-iter x n + non-iter overhead using the BEST run's telemetry, and q39/q70 priced at cold wall minus their one-time build stages when the minimum is still the cold run (all pricing capped at measured best; substitutions in priced), value_wall=same sum unpriced, cold_value=the priced sum with every query carrying a <name>:cold pin (the memoized standing builds) priced at its cold FIRST run instead of its warm minimum — the cold-inclusive headline, first_run_sum=sum of first runs, first_runs=per-query first (cold) runs, runs=per-query run counts (1 = single cold sample), load=per-query [loadavg_before,loadavg_after,steal_sec], over_pin=queries ending >1.5x pin after retries+salvage, contended=true when over_pin>=10 and >=10% of surface (box-level interference), budget_exhausted=true when a retry budget drained mid-suite"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","value_wall":$totalWall,"first_run_sum":$totalFirst,"cold_value":$totalCold,"budget_exhausted":$budgetExhausted,"pins_active":$pinsActive,"contended":$contended,"over_pin":$overPin,"queries":$qs,"first_runs":$firstRuns,"runs":$runCounts,$pricedJson$loadJson$salvageJson$iterJson$stageJson$memoJson"sf":"$sfDir","nproc":${Runtime.getRuntime.availableProcessors},"failures":$fails,"protocol":"queries=min of up to $reps runs (repeats only when first<${repeatThreshold}s, global extra budget ${repeatBudget}s; ANY query retries up to twice when best>1.5x its BENCH_EXPECT.json pin — a :cold pin exempts a memoized query's first run, ml04/ml06 are judged on median iter time, and pin retries are disabled entirely when the sf dir is not the pins' _pin_dir (pins_active=false) — budget ${heavyBudget}s); after the main loop a steal-gated salvage pass re-runs still-over-pin queries cheapest-pin-first (up to 2 runs each, every attempt preceded by a ~1s zero-steal probe, budget ${salvageBudget}s incl. probe sleeps; per-candidate [runs,skipped_steal,improved] in salvage); value=de-noised sum of per-query minima with iter-telemetry queries priced at median-iter x n + non-iter overhead using the BEST run's telemetry, and q39/q70 priced at cold wall minus their one-time build stages when the minimum is still the cold run (all pricing capped at measured best; substitutions in priced), value_wall=same sum unpriced, cold_value=the priced sum with every query carrying a <name>:cold pin (the memoized standing builds) priced at its cold FIRST run instead of its warm minimum — the cold-inclusive headline, first_run_sum=sum of first runs, first_runs=per-query first (cold) runs, runs=per-query run counts (1 = single cold sample), load=per-query [loadavg_before,loadavg_after,steal_sec], over_pin=queries ending >1.5x pin after retries+salvage, contended=true when over_pin>=10 and >=10% of surface (box-level interference), budget_exhausted=true when a retry budget drained mid-suite"}"""
     // Stop Spark BEFORE printing so no executor/shutdown logging can
     // interleave with (or follow) the metric line; also persist a copy —
     // the round-1 driver failed to tail-parse stdout (sbt appends

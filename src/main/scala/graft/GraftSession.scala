@@ -18,10 +18,13 @@ object GraftSession {
   val OpenCostInBytes: Long = 65536L
 
   /** Local core count from `SPARK_GRAFT_CPUS`, default 4. */
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4) { v =>
-    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-  }
+  def cpus: Int = positiveInt("SPARK_GRAFT_CPUS", 4)
+
+  /** The positive integer in env var `name`, or `default` when it is
+    * unset; any other value fails with a message naming the variable. */
+  private[graft] def positiveInt(name: String, default: Int, env: Map[String, String] = sys.env): Int =
+    env.get(name).fold(default)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$name must be a positive integer, got '$v'")))
 
   /** The plan-affecting confs of a `local(cpus)` session. */
   private[graft] def planConfs(cpus: Int): Seq[(String, String)] = Seq(

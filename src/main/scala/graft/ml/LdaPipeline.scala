@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.obs.QueryProfile
 import org.apache.spark.ml.clustering.{DistributedLDAModel, GraftMlLdaBridge, LDA, LDAModel, LocalLDAModel}
 import org.apache.spark.mllib.clustering.GraftLdaBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -125,60 +126,17 @@ object LdaPipeline {
       case other =>
         throw new IllegalArgumentException(s"Only em, online are supported but got $other.")
     }
-    if (params.algorithm.equalsIgnoreCase("online")) {
-      // decomposing telemetry for online fits (r14 verdict #3): the
-      // online optimizer submits a couple of short jobs per iteration
-      // (sampled-minibatch aggregation + update), so the per-job wall
-      // times of the fit decompose it into ~2×maxIter uniform samples
-      // (EM records iterationTimes inside the model instead —
-      // emIterationTimes below)
-      val (model, times) = jobTimes(spark)(lda.fit(corpus))
-      lastOnlineFitJobTimes = Some(times)
-      Fitted(model, vocab, idf, corpus)
-    } else Fitted(EmLda.fit(lda, corpus), vocab, idf, corpus)
+    // an online fit is one phase: the optimizer submits a couple of
+    // short jobs per iteration (minibatch sample + aggregation), so the
+    // tagged jobs' walls decompose the fit into ~2×maxIter uniform
+    // samples (EM records iterationTimes inside the model instead —
+    // emIterationTimes below)
+    val model = if (online) QueryProfile.phase(spark, OnlineFit)(lda.fit(corpus)) else EmLda.fit(lda, corpus)
+    Fitted(model, vocab, idf, corpus)
   }
 
-  /** Per-job wall times of the most recent ONLINE fit (seconds, job
-    * submission order; ~2 jobs per iteration) — ml06's analogue of
-    * ml04's emIterationTimes, so a slow online-LDA sample in a driver
-    * artifact decomposes into ~100 uniform per-job costs vs a few
-    * stalled jobs (r14 verdict #3: ml06 ran 60.9 s cold in the r14
-    * driver bench with nothing to attribute it to). Telemetry only —
-    * never part of a query result. */
-  @volatile var lastOnlineFitJobTimes: Option[Seq[Double]] = None
-
-  /** Runs `f` and returns its result plus the wall time of every Spark
-    * job submitted meanwhile, in job-id order. Durations come from the
-    * scheduler's own event timestamps (SparkListenerJobStart/End.time),
-    * so listener-bus lag cannot skew them; the bus is async, so after
-    * `f` returns we poll briefly for quiescence instead of reaching
-    * into the private listener-bus API. Bench runs queries serially, so
-    * the captured jobs are the fit's own. */
-  private def jobTimes[A](spark: SparkSession)(f: => A): (A, Seq[Double]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val starts = scala.collection.concurrent.TrieMap.empty[Int, Long]
-    val durs = scala.collection.concurrent.TrieMap.empty[Int, Double]
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        starts(j.jobId) = j.time
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        starts.remove(j.jobId).foreach(t0 => durs(j.jobId) = (j.time - t0) / 1e3)
-    }
-    spark.sparkContext.addSparkListener(l)
-    val r = try f finally {
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 20) { // ≤1 s, usually ~100 ms
-        Thread.sleep(50)
-        waited += 1
-        val n = durs.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-      spark.sparkContext.removeSparkListener(l)
-    }
-    (r, durs.toSeq.sortBy(_._1).map(_._2))
-  }
+  /** The phase an online `lda.fit` runs in. */
+  val OnlineFit = "online_fit"
 
   /** Per-iteration EM training times (seconds) as recorded in the fitted
     * model (mllib's `iterationTimes`, which [[EmLda]] fills with the

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Memo, QueryDef, Tables => T}
 import graft.ml.{LdaPipeline, Vectorize}
+import graft.obs.QueryProfile
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -102,13 +103,6 @@ object MlQueries {
     * the ml03 scaladoc. */
   private val ml03StatsMemo = Memo.slot[(Long, Long, Double, Long)]("ml.ml03_stats")(_ => ())
 
-  /** Telemetry sink for ml03's most recent COLD stats computation:
-    * (stage, seconds) in execution order. Bench folds this into its
-    * JSON line (the ml04IterTimes idiom) so a slow ml03 in a driver
-    * artifact decomposes per stage. Memo hits leave the cold record in
-    * place — it is the number that explains the bench's first run. */
-  @volatile var ml03StageTimes: Option[Seq[(String, Double)]] = None
-
   private def ldaFit(s: org.apache.spark.sql.SparkSession, d: String) =
     fitMemo(s, d) {
       val tokens = T.documents(s, d)
@@ -203,10 +197,9 @@ object MlQueries {
     * fitted model, so re-running it per bench rep only re-measures the
     * environment — the r13 driver JVM spent 5 × 9.15 s on it (vs a
     * 1.16 s clean pin), the single biggest heavy-retry burn of the
-    * round. The cold computation records per-stage wall times in
-    * [[ml03StageTimes]], which Bench folds into its JSON line so the
-    * next noisy artifact decomposes into stages instead of needing
-    * forensics (the ml04IterTimes idiom). */
+    * round. The cold computation runs each stats pass as a
+    * [[QueryProfile.phase]], so a noisy first run decomposes into stages
+    * in Bench's `stage_times`. */
   val ml03 = QueryDef.sql("ml03_lda_model_stats",
     """SELECT
       |  (SELECT COUNT(*) FROM documents) AS corpus_size,
@@ -229,21 +222,13 @@ object MlQueries {
         "uncapped-count oracle no longer matches the fitted pipeline")
     val (corpusSize, activeTerms, ll, totalTokens) =
       ml03StatsMemo(s, d) {
-        val stages = Seq.newBuilder[(String, Double)]
-        def timed[A](name: String)(f: => A): A = {
-          val t0 = System.nanoTime()
-          val r = f
-          stages += name -> (System.nanoTime() - t0) / 1e9
-          r
-        }
-        val cs = timed("corpus_count")(fitted.corpus.count())
-        val at = timed("active_terms")(
+        val cs = QueryProfile.phase(s, "corpus_count")(fitted.corpus.count())
+        val at = QueryProfile.phase(s, "active_terms")(
           Vectorize.activeTermCount(fitted.corpus))
-        val l = timed("log_likelihood")(
+        val l = QueryProfile.phase(s, "log_likelihood")(
           fitted.model.logLikelihood(fitted.corpus))
-        val tt = timed("total_tokens")(T.documents(s, d)
+        val tt = QueryProfile.phase(s, "total_tokens")(T.documents(s, d)
           .agg(sum(size(split(col("text"), " ")))).head().getLong(0))
-        ml03StageTimes = Some(stages.result())
         (cs, at, l, tt)
       }
     val avgLl = ll / corpusSize
@@ -306,24 +291,13 @@ object MlQueries {
       val fitted = LdaPipeline.train(s, tokens,
         LdaPipeline.Params(k = 5, maxIterations = 50, algorithm = "em",
           seed = 42L))
-      ml04IterTimes = LdaPipeline.emIterationTimes(fitted)
+      LdaPipeline.emIterationTimes(fitted).getOrElse(Nil)
+        .foreach(QueryProfile.record(EmIteration, _))
       topicsChecked(s, fitted, 10)
   }
 
-  /** Telemetry sink for ml04's most recent EM fit: the optimizer's
-    * per-iteration training times. Bench folds these into its JSON line
-    * so a slow driver-environment ml04 decomposes into 50 × per-iter
-    * cost instead of needing forensics (r5 verdict item 3). Not part of
-    * any query's result — purely observability. */
-  @volatile var ml04IterTimes: Option[Seq[Double]] = None
-
-  /** Telemetry sink for ml06's most recent ONLINE fit: per-job wall
-    * times of the fit (~2 short jobs per iteration — see
-    * LdaPipeline.lastOnlineFitJobTimes). The ml04 idiom for the online
-    * optimizer (r14 verdict #3: ml06 recorded a 60.9 s cold driver
-    * sample with no telemetry to adjudicate it); Bench keys its
-    * iter-median guard to this via Bench.iterTelemetry. */
-  @volatile var ml06IterTimes: Option[Seq[Double]] = None
+  /** The name under which ml04 records each EM iteration time. */
+  val EmIteration = "em_iteration"
 
   /** ml06 — A6 on the ONLINE optimizer at the reference's FULL training
     * configuration (k=5, 50 iterations, auto α/β, the `0.05 +
@@ -350,7 +324,6 @@ object MlQueries {
       .select(col("doc_id"), split(col("text"), " ").as("tokens"))
     val fitted = LdaPipeline.train(s, tokens,
       LdaPipeline.Params(k = 5, maxIterations = 50, algorithm = "online", seed = 42L))
-    ml06IterTimes = LdaPipeline.lastOnlineFitJobTimes
     // per-doc posterior invariants in ONE pass over the cached corpus:
     // booleans reduced with min() (false < true ⇒ min == AND), so the
     // aggregate is map-side combinable — no per-doc rows move

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables => T}
 import graft.functions.ExactAgg._
+import graft.obs.QueryProfile
 import org.apache.spark.sql.functions._
 
 /** Storage-layout operators — the physical-design levers that matter at
@@ -72,14 +73,6 @@ object Storage {
       .orderBy("o_orderstatus")
   }
 
-  /** Stage telemetry for q39's cold run (r14 verdict #4: a 14.4 s
-    * driver first run vs a 5.5 s cold pin had nothing to attribute it
-    * to): wall times of the two bucketed CTAS writes, recorded once per
-    * session when the tables are actually built. Bench folds this into
-    * its stage_times JSON — the join itself is the remainder of the
-    * first run's wall. Telemetry only. */
-  @volatile var q39StageTimes: Option[Seq[(String, Double)]] = None
-
   /** The bucketed join itself (shared with the plan assertion in
     * StorageSpec). Bucket count 8 on the join key both sides. */
   def bucketedJoin(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
@@ -88,17 +81,13 @@ object Storage {
     // session
     val tag = java.lang.Integer.toHexString(d.hashCode).replace('-', 'n')
     val (to, tl) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
+    // the two CTAS writes are q39's one-time build stages (Bench prices
+    // them out of a cold-only minimum)
     if (!s.catalog.tableExists(to) || !s.catalog.tableExists(tl)) {
-      val t0 = System.nanoTime()
-      T.orders(s, d).write.mode("overwrite")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(to)
-      val t1 = System.nanoTime()
-      T.lineitem(s, d).write.mode("overwrite")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(tl)
-      val t2 = System.nanoTime()
-      q39StageTimes = Some(Seq(
-        "build_bucketed_orders" -> (t1 - t0) / 1e9,
-        "build_bucketed_lineitem" -> (t2 - t1) / 1e9))
+      QueryProfile.phase(s, "build_bucketed_orders")(T.orders(s, d).write
+        .mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(to))
+      QueryProfile.phase(s, "build_bucketed_lineitem")(T.lineitem(s, d).write
+        .mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(tl))
     }
     val o = s.table(to)
     val l = s.table(tl)
@@ -422,30 +411,19 @@ object Storage {
     * footer-stats pass a layout job runs once). */
   private[graft] def zorderedLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val tmp = scratchDir("graft_zorder", d)
-    val t0 = System.nanoTime()
-    val li = T.lineitem(s, d)
-    val b = li.agg(min("l_partkey"), max("l_partkey"),
-      min("l_suppkey"), max("l_suppkey")).head
-    val t1 = System.nanoTime()
-    li.select(col("l_partkey"), col("l_suppkey"), col("l_returnflag"),
-        col("l_quantity"),
-        zCol(b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3)).as("z"))
-      .repartitionByRange(16, col("z"))
-      .sortWithinPartitions("z")
-      .write.mode("overwrite").parquet(tmp)
-    if (q70StageTimes.isEmpty) q70StageTimes = Some(Seq(
-      "key_bounds_agg" -> (t1 - t0) / 1e9,
-      "zorder_layout_write" -> (System.nanoTime() - t1) / 1e9))
+    val (li, b) = QueryProfile.phase(s, "key_bounds_agg") {
+      val li = T.lineitem(s, d)
+      (li, li.agg(min("l_partkey"), max("l_partkey"), min("l_suppkey"), max("l_suppkey")).head)
+    }
+    QueryProfile.phase(s, "zorder_layout_write")(
+      li.select(col("l_partkey"), col("l_suppkey"), col("l_returnflag"),
+          col("l_quantity"),
+          zCol(b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3)).as("z"))
+        .repartitionByRange(16, col("z"))
+        .sortWithinPartitions("z")
+        .write.mode("overwrite").parquet(tmp))
     tmp
   }
-
-  /** Stage telemetry for q70's first run (r15 candidate (d): a 2.2 s
-    * first-min vs a 1.6 s pin in one clean pass with nothing to
-    * attribute it to — q39's class, a write-heavy layout build): wall
-    * of the key-bounds agg vs the range-partitioned z-sorted write,
-    * recorded on the session's FIRST layout build; the box query is
-    * the remainder of the first run's wall. Telemetry only. */
-  @volatile var q70StageTimes: Option[Seq[(String, Double)]] = None
 
   /** q70 — Z-order clustering for multi-dimensional data skipping: a
     * single sort key can make parquet min/max stats tight in ONE

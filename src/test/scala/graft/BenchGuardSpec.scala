@@ -40,7 +40,7 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("an iter_median pin on an unkeyed query never reads iteration telemetry") {
-    // r13 ADVICE #1: the telemetry is keyed (Bench.iterTelemetry) — a
+    // r13 ADVICE #1: the telemetry is keyed (Bench.iterPriced) — a
     // future query pinned on iter_times must not be judged against
     // telemetry that isn't its own; the wall pin applies instead
     val pins = Map("other_q" -> 1.0, "other_q:iter_median" -> 0.5)
@@ -50,7 +50,7 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("ml06 is keyed for the iter-median guard like ml04 (r14 verdict #3)") {
     val ml06 = "ml06_lda_online_train"
-    assert(Bench.iterTelemetry.contains(ml06) && Bench.iterTelemetry.contains(ml04))
+    assert(Bench.iterPriced(ml06) && Bench.iterPriced(ml04))
     val pins = Map(ml06 -> 6.0, s"$ml06:iter_median" -> 0.10)
     // the r14 driver shape: 60.9 s wall on a healthy per-iteration
     // median (a few stalled iterations) — suppressed
@@ -131,9 +131,9 @@ class BenchGuardSpec extends AnyFunSuite {
     // both build queries are keyed; ml03's per-invocation stats passes
     // are deliberately NOT (they run every time — nothing one-time to
     // remove)
-    assert(Bench.buildStageTelemetry.contains(q39) &&
-      Bench.buildStageTelemetry.contains("q70_zorder_clustering") &&
-      !Bench.buildStageTelemetry.contains("ml03_lda_model_stats"))
+    assert(Bench.buildPriced(q39) &&
+      Bench.buildPriced("q70_zorder_clustering") &&
+      !Bench.buildPriced("ml03_lda_model_stats"))
     // the r17 contended-pass shape: a single cold 9.1 s sample carrying
     // a 8.8 s build vs a 0.33 s query pin — priced at the remainder
     assert(math.abs(Bench.buildPricedValue(q39, 9.1, 9.1, stages) - 0.3) < 1e-9)
@@ -184,5 +184,40 @@ class BenchGuardSpec extends AnyFunSuite {
       Some(Seq.fill(50)(9.9)), pinsActive = false).isEmpty)
     // and pinsActive=true (the default) keeps both live
     assert(Bench.spikeDecision("q01_pricing_summary", 99.0, 1, pins, None).isDefined)
+  }
+
+  test("a failed run never becomes a query's best, however fast it failed") {
+    val p = obs.QueryProfile(Nil, Nil)
+    val best = Bench.Sample(5.0, p)
+    // a run that throws early is fast for the wrong reason: folding its
+    // elapsed time would publish a 0.1 s minimum for a 5 s query
+    assert(Bench.foldBest(best, None) eq best)
+    // a slower success leaves best; a tie keeps the earlier run
+    assert(Bench.foldBest(best, Some(Bench.Sample(6.0, p))) eq best)
+    assert(Bench.foldBest(best, Some(Bench.Sample(5.0, p))) eq best)
+    // a faster success replaces it
+    val faster = Bench.Sample(4.0, p)
+    assert(Bench.foldBest(best, Some(faster)) eq faster)
+  }
+
+  test("SPARK_GRAFT_BENCH_REPS must be a positive integer") {
+    val knob = "SPARK_GRAFT_BENCH_REPS"
+    def reps(v: String) = GraftSession.positiveInt(knob, 3, Map(knob -> v))
+    assert(GraftSession.positiveInt(knob, 3, Map.empty) == 3)
+    assert(reps(" 2 ") == 2)
+    for (bad <- Seq("0", "-1", "x")) {
+      val e = intercept[IllegalArgumentException](reps(bad))
+      assert(e.getMessage.contains(knob) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("the iteration series reads EM's recorded times or the online fit's job walls") {
+    val em = obs.QueryProfile(Seq("em_iteration" -> 0.5, "em_iteration" -> 0.4), Nil)
+    assert(Bench.iterTimes(em) == Some(Seq(0.5, 0.4)))
+    val online = obs.QueryProfile(Seq("online_fit" -> 3.0),
+      Seq("online_fit" -> 0.02, "other" -> 9.0, "online_fit" -> 0.03))
+    assert(Bench.iterTimes(online) == Some(Seq(0.02, 0.03)))
+    // no series: the spike decision falls back to the wall pin
+    assert(Bench.iterTimes(obs.QueryProfile(Seq("corpus_count" -> 1.0), Nil)).isEmpty)
   }
 }
