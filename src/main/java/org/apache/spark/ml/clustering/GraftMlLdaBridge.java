@@ -4,9 +4,9 @@ import org.apache.spark.ml.param.ParamMap;
 import org.apache.spark.sql.SparkSession;
 
 /**
- * Package bridge between graft.ml.EmLda and the spark.ml LDA wrapper:
- * wraps an mllib EM model the way {@code LDA.fit} does, and unwraps it
- * again. Java, not Scala: {@code Params.copyValues} and
+ * Package bridge between graft.ml.EmLda / graft.ml.OnlineLda and the
+ * spark.ml LDA wrapper: wraps an mllib EM or online model the way
+ * {@code LDA.fit} does, and unwraps an EM model again. Java, not Scala: {@code Params.copyValues} and
  * {@code LDAModel.getModel} are Scala-{@code protected}, which Scala
  * admits only from subclasses, while both compile to public JVM methods.
  * No Spark internals are modified.
@@ -22,6 +22,13 @@ public final class GraftMlLdaBridge {
     DistributedLDAModel model =
         new DistributedLDAModel(lda.uid(), old.vocabSize(), old, spark, scala.Option.empty());
     return (DistributedLDAModel) lda.copyValues(model, ParamMap.empty()).setParent(lda);
+  }
+
+  /** The model {@code lda.fit} returns for an online fit. */
+  public static LocalLDAModel wrap(
+      LDA lda, org.apache.spark.mllib.clustering.LocalLDAModel old, SparkSession spark) {
+    LocalLDAModel model = new LocalLDAModel(lda.uid(), old.vocabSize(), old, spark);
+    return (LocalLDAModel) lda.copyValues(model, ParamMap.empty()).setParent(lda);
   }
 
   public static org.apache.spark.mllib.clustering.DistributedLDAModel unwrap(

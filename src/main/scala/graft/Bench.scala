@@ -27,10 +27,12 @@ object Bench {
     * decomposing telemetry). */
   private[graft] val iterPriced = Set("ml04_lda_em_train", "ml06_lda_online_train")
 
-  /** A run's iteration series: ml04's recorded EM iteration times or
-    * the walls of ml06's online-fit jobs; None when the run has none. */
+  /** A run's iteration series: ml04's recorded EM iteration times, or
+    * ml06's online iteration times (recorded by a driver-side fit under
+    * `LdaPipeline.DriverFitCap`, the walls of the online-fit jobs above
+    * it); None when the run has none. */
   private[graft] def iterTimes(p: QueryProfile): Option[Seq[Double]] =
-    Some(p.walls(operators.MlQueries.EmIteration) ++
+    Some(p.walls(operators.MlQueries.EmIteration) ++ p.walls(ml.LdaPipeline.OnlineIteration) ++
       p.jobWalls(ml.LdaPipeline.OnlineFit)).filter(_.nonEmpty)
 
   /** The per-query spike decision, extracted pure so BenchGuardSpec can

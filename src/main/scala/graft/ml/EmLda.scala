@@ -2,7 +2,7 @@ package graft.ml
 
 import breeze.linalg.{DenseVector => BDV}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.ml.clustering.{DistributedLDAModel, GraftMlLdaBridge, LDA}
@@ -42,7 +42,9 @@ import scala.collection.mutable
   *
   * Memory: only the doc-side blocks are cached (CSR, N_jk, and the term
   * partials sparse over the block's own terms). The driver holds one W×k
-  * matrix, which `Vectorize.buildVocab`'s `broadcastVocabCap` bounds.
+  * matrix, which `Vectorize.buildVocab`'s `broadcastVocabCap` bounds —
+  * except on the driver path (`fit(..., onDriver = true)`, taken under
+  * [[LdaPipeline.DriverFitCap]]), where it holds the blocks themselves.
   */
 object EmLda {
 
@@ -167,11 +169,43 @@ object EmLda {
     TermTopics(vocabSize, nWk, nK)
   }
 
+  /** What an iteration loop hands to the model build: the last doc-side
+    * state, its term-topic counts, the iteration times and the written
+    * checkpoints, oldest first. */
+  private final class Iterated(
+      val state: RDD[Block], val tt: TermTopics, val iterationTimes: Array[Double],
+      val checkpoints: Seq[RDD[Block]])
+
+  /** The vocabulary size, from the first non-empty block. */
+  private def vocabSizeOf(parts: Array[(Int, Array[Int], Array[Double])], k: Int): Int = {
+    val vocabSize = parts.iterator.map(_._1).find(_ >= 0)
+      .getOrElse(throw new IllegalArgumentException("EM-LDA needs a non-empty corpus"))
+    require(vocabSize.toLong * k <= Int.MaxValue, s"vocabulary $vocabSize × k $k exceeds one array")
+    vocabSize
+  }
+
+  private def removeCheckpoint(sc: SparkContext, rdd: RDD[Block]): Unit =
+    rdd.getCheckpointFile.foreach { f =>
+      val path = new Path(f)
+      path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
+    }
+
   /** Fits `lda` (k, maxIter, seed, checkpointInterval, keepLastCheckpoint,
     * featuresCol, the concentrations) on `corpus` with the EM update and
     * returns the model `lda.setOptimizer("em").fit(corpus)` returns, with
-    * the estimator's params copied to it. */
-  def fit(lda: LDA, corpus: DataFrame): DistributedLDAModel = {
+    * the estimator's params copied to it.
+    *
+    * With `onDriver` the blocks are built on the cluster as always, then
+    * collected once and iterated on the driver in partition order: the
+    * same updates summed in the same order, so the model is bit-identical
+    * to the cluster loop's, with no job per iteration and no checkpoint
+    * (the state has no lineage to cut). The driver then holds every
+    * block twice during an iteration: per nonzero token 12 bytes of CSR
+    * plus k doubles of doc and term partials at most, i.e. under
+    * 2 × (12 / k + 16) bytes per nonzero·topic cell, plus the W×k
+    * term-topic counts. [[LdaPipeline.train]] takes this path only under
+    * [[LdaPipeline.DriverFitCap]] cells. */
+  def fit(lda: LDA, corpus: DataFrame, onDriver: Boolean = false): DistributedLDAModel = {
     lda.transformSchema(corpus.schema)
     val sc = corpus.sparkSession.sparkContext
     val k = lda.getK
@@ -185,59 +219,15 @@ object EmLda {
     require(alpha > 1.0, s"EM-LDA needs docConcentration > 1, got $alpha")
     require(eta > 1.0, s"EM-LDA needs topicConcentration > 1, got $eta")
     val seed = lda.getSeed
-    val interval = lda.getCheckpointInterval
-    val checkpointing = interval > 0 && sc.getCheckpointDir.nonEmpty
-
-    // the doc-side state, checkpointed as mllib's PeriodicGraphCheckpointer
-    // does its graph: every `interval`-th update (the init counts as the
-    // first), superseded checkpoint files deleted once a newer one is
-    // written. A broadcast is destroyed only when the newest written
-    // checkpoint cuts it out of the lineage: a map's closure stays
-    // reachable from its RDD until the RDD after it is checkpointed, and
-    // re-serializing a destroyed broadcast fails the next task.
-    var state: RDD[Block] = null
-    var updates = 0
-    val checkpoints = mutable.Queue.empty[(Int, RDD[Block])]
-    val broadcasts = mutable.Queue.empty[(Int, Broadcast[TermTopics])]
-    def removeCheckpoint(rdd: RDD[Block]): Unit = rdd.getCheckpointFile.foreach { f =>
-      val path = new Path(f)
-      path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-    }
-    def update(next: RDD[Block]): Array[(Int, Array[Int], Array[Double])] = {
-      next.persist(StorageLevel.MEMORY_AND_DISK)
-      updates += 1
-      if (checkpointing && updates % interval == 0) {
-        next.checkpoint()
-        checkpoints.enqueue(updates -> next)
-      }
-      val parts = next.map(b => (b.vocabSize, b.terms, b.termPartial)).collect()
-      if (state != null) state.unpersist(blocking = false)
-      state = next
-      checkpoints.lastOption.filter(_._2.isCheckpointed).foreach { case (u, _) =>
-        while (checkpoints.size > 1) removeCheckpoint(checkpoints.dequeue()._2)
-        while (broadcasts.headOption.exists(_._1 < u)) broadcasts.dequeue()._2.destroy()
-      }
-      parts
-    }
-
     val docs = corpus.select(monotonically_increasing_id(), col(lda.getFeaturesCol)).rdd
-    val first = update(docs.mapPartitionsWithIndex((p, rows) =>
-      Iterator.single(Block.init(rows, k, new java.util.Random(p + seed)))))
-    val vocabSize = first.iterator.map(_._1).find(_ >= 0)
-      .getOrElse(throw new IllegalArgumentException("EM-LDA needs a non-empty corpus"))
-    require(vocabSize.toLong * k <= Int.MaxValue, s"vocabulary $vocabSize × k $k exceeds one array")
-    var tt = termTopics(vocabSize, k, first)
-
-    // mllib's iterationTimes: the wall time of one whole iteration,
-    // checkpoint write included
-    val iterationTimes = Array.fill(lda.getMaxIter) {
-      val t0 = System.nanoTime()
-      val bc = sc.broadcast(tt)
-      broadcasts.enqueue((updates + 1) -> bc)
-      tt = termTopics(vocabSize, k, update(state.map(_.next(bc.value, k, alpha, eta))))
-      bc.unpersist(blocking = false)
-      (System.nanoTime() - t0) / 1e9
-    }
+    val init = docs.mapPartitionsWithIndex((p, rows) =>
+      Iterator.single(Block.init(rows, k, new java.util.Random(p + seed))))
+    val it =
+      if (onDriver) iterateOnDriver(init, k, alpha, eta, lda.getMaxIter)
+      else iterateOnCluster(lda, init, k, alpha, eta)
+    val state = it.state
+    val tt = it.tt
+    val vocabSize = tt.vocabSize
 
     // mllib's graph, built once: doc vertex j → N_jk, term vertex
     // −(1+w) → N_wk, one edge per nonzero token. A vocabulary term with
@@ -259,11 +249,81 @@ object EmLda {
     graph.edges.count()
 
     val checkpointFiles =
-      if (lda.getKeepLastCheckpoint) checkpoints.flatMap(_._2.getCheckpointFile).toArray
-      else { checkpoints.foreach(c => removeCheckpoint(c._2)); Array.empty[String] }
+      if (lda.getKeepLastCheckpoint) it.checkpoints.flatMap(_.getCheckpointFile).toArray
+      else { it.checkpoints.foreach(removeCheckpoint(sc, _)); Array.empty[String] }
     state.unpersist(blocking = false)
     val old = GraftLdaBridge.distributedModel(graph, BDV(tt.nK), k, vocabSize, alpha, eta,
-      iterationTimes, checkpointFiles)
+      it.iterationTimes, checkpointFiles)
     GraftMlLdaBridge.wrap(lda, old, corpus.sparkSession)
+  }
+
+  /** The blocks collected once and iterated on the driver, in partition
+    * order; the final blocks become one partition each again. */
+  private def iterateOnDriver(
+      init: RDD[Block], k: Int, alpha: Double, eta: Double, maxIter: Int): Iterated = {
+    var blocks = init.collect()
+    def parts = blocks.map(b => (b.vocabSize, b.terms, b.termPartial))
+    val vocabSize = vocabSizeOf(parts, k)
+    var tt = termTopics(vocabSize, k, parts)
+    // mllib's iterationTimes: the wall time of one whole iteration
+    val iterationTimes = Array.fill(maxIter) {
+      val t0 = System.nanoTime()
+      blocks = blocks.map(_.next(tt, k, alpha, eta))
+      tt = termTopics(vocabSize, k, parts)
+      (System.nanoTime() - t0) / 1e9
+    }
+    new Iterated(init.sparkContext.parallelize(blocks.toSeq, blocks.length), tt, iterationTimes, Nil)
+  }
+
+  /** One narrow stage per iteration over the cached blocks. */
+  private def iterateOnCluster(
+      lda: LDA, init: RDD[Block], k: Int, alpha: Double, eta: Double): Iterated = {
+    val sc = init.sparkContext
+    val interval = lda.getCheckpointInterval
+    val checkpointing = interval > 0 && sc.getCheckpointDir.nonEmpty
+
+    // the doc-side state, checkpointed as mllib's PeriodicGraphCheckpointer
+    // does its graph: every `interval`-th update (the init counts as the
+    // first), superseded checkpoint files deleted once a newer one is
+    // written. A broadcast is destroyed only when the newest written
+    // checkpoint cuts it out of the lineage: a map's closure stays
+    // reachable from its RDD until the RDD after it is checkpointed, and
+    // re-serializing a destroyed broadcast fails the next task.
+    var state: RDD[Block] = null
+    var updates = 0
+    val checkpoints = mutable.Queue.empty[(Int, RDD[Block])]
+    val broadcasts = mutable.Queue.empty[(Int, Broadcast[TermTopics])]
+    def update(next: RDD[Block]): Array[(Int, Array[Int], Array[Double])] = {
+      next.persist(StorageLevel.MEMORY_AND_DISK)
+      updates += 1
+      if (checkpointing && updates % interval == 0) {
+        next.checkpoint()
+        checkpoints.enqueue(updates -> next)
+      }
+      val parts = next.map(b => (b.vocabSize, b.terms, b.termPartial)).collect()
+      if (state != null) state.unpersist(blocking = false)
+      state = next
+      checkpoints.lastOption.filter(_._2.isCheckpointed).foreach { case (u, _) =>
+        while (checkpoints.size > 1) removeCheckpoint(sc, checkpoints.dequeue()._2)
+        while (broadcasts.headOption.exists(_._1 < u)) broadcasts.dequeue()._2.destroy()
+      }
+      parts
+    }
+
+    val first = update(init)
+    val vocabSize = vocabSizeOf(first, k)
+    var tt = termTopics(vocabSize, k, first)
+
+    // mllib's iterationTimes: the wall time of one whole iteration,
+    // checkpoint write included
+    val iterationTimes = Array.fill(lda.getMaxIter) {
+      val t0 = System.nanoTime()
+      val bc = sc.broadcast(tt)
+      broadcasts.enqueue((updates + 1) -> bc)
+      tt = termTopics(vocabSize, k, update(state.map(_.next(bc.value, k, alpha, eta))))
+      bc.unpersist(blocking = false)
+      (System.nanoTime() - t0) / 1e9
+    }
+    new Iterated(state, tt, iterationTimes, checkpoints.map(_._2).toSeq)
   }
 }

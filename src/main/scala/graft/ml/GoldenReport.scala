@@ -138,8 +138,10 @@ object GoldenReport {
     render(k, books.toSeq, topicRows.toSeq, era)
   }
 
+  /** Writes `content` as UTF-8 whatever the JVM's default charset: book
+    * names and top words come in eight languages. */
   def write(path: String, content: String): Unit = {
-    val pw = new java.io.PrintWriter(path)
+    val pw = new java.io.PrintWriter(path, java.nio.charset.StandardCharsets.UTF_8)
     try pw.write(content) finally pw.close()
   }
 }

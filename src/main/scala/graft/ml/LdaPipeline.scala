@@ -21,14 +21,22 @@ import org.apache.spark.sql.functions._
   *  - a seed is always pinned (the reference never set one — SURVEY.md
   *    §7 risk 2 — which made its runs irreproducible; we fix that).
   *
-  * Scale: EM iterates on doc-partitioned blocks ([[EmLda]]: memory ∝
-  * corpus nonzeros on the executors plus one W×k term-topic matrix on
-  * the driver, bounded by the broadcast vocabulary cap) and builds the
-  * GraphX doc-term graph of mllib's model once, after the last
-  * iteration; online is the 100 TB path (minibatched variational
-  * updates, corpus never fully materialized per iteration). The loader-
-  * side inference is cluster-wide `model.transform`, not the reference's
-  * per-book driver loop (SURVEY.md §3.2 boundary note).
+  * Scale: a corpus of at most [[DriverFitCap]] nonzero·topic cells
+  * iterates on the driver with zero Spark jobs per iteration (EM:
+  * [[EmLda]] with `onDriver`; online: [[OnlineLda]]). The driver then
+  * holds the corpus and its per-iteration state: EM under 2 × (12/k +
+  * 16) bytes per cell, i.e. under 80 MB at the cap for k = 5 (see
+  * [[EmLda.fit]]); online 12 bytes per nonzero plus one vector per
+  * document, besides the vocabulary × k matrices mllib's driver holds
+  * anyway. Above the cap EM iterates on doc-partitioned blocks on the
+  * executors (memory ∝ corpus nonzeros there, plus one W×k term-topic
+  * matrix on the driver, bounded by the broadcast vocabulary cap) and
+  * online is mllib's optimizer, the 100 TB path (minibatched variational
+  * updates, corpus never fully materialized per iteration). Either way
+  * EM builds the GraphX doc-term graph of mllib's model once, after the
+  * last iteration. The loader-side inference is cluster-wide
+  * `model.transform`, not the reference's per-book driver loop
+  * (SURVEY.md §3.2 boundary note).
   */
 object LdaPipeline {
 
@@ -72,14 +80,19 @@ object LdaPipeline {
     val counts = Vectorize.wordCounts(nonEmpty)
     val vocab = Vectorize.buildVocab(counts, params.vocabSize)
     val tf = Vectorize.countVectors(nonEmpty, vocab)
-    val corpusSize = tf.count()
-    val idf = Vectorize.fitIdf(tf).idf.toArray
+    val idfModel = Vectorize.fitIdf(tf)
+    val corpusSize = idfModel.numDocs
+    val idf = idfModel.idf.toArray
+    val onDriver = Vectorize.nonzeros(idfModel) * params.k <= DriverFitCap
     // partition count tracks corpus size: EM-LDA runs one stage per
     // iteration, and over-partitioning a small corpus turns the
     // training into pure scheduler overhead (measured 123 s → 74 s on
     // the reference EN corpus going 32 → 8 partitions, when each
     // iteration ran four GraphX stages). At real scale the default
-    // parallelism stands.
+    // parallelism stands. A fit under DriverFitCap runs no per-iteration
+    // job, but keeps this partitioning: the partitions seed EM's init
+    // and online's minibatch samples, so its model is the one the
+    // distributed fit of the same corpus gives.
     val scaled = Vectorize.tfidfWithFloor(spark, tf, idf)
     val online = params.algorithm.equalsIgnoreCase("online")
     // ONLINE partitioning tracks the MINIBATCH, not the corpus (r19,
@@ -102,14 +115,14 @@ object LdaPipeline {
 
     // Checkpoint storage cost (r17 verdict #3): with a checkpoint dir
     // set (Bench/Verify/BookBench do — without one the interval is a
-    // silent no-op, r16 verdict #3), EM writes its doc-side block state
-    // (the corpus in CSR form plus the doc-topic counts) to the dir every
-    // `checkpointInterval` (10) iterations and deletes the superseded
-    // copy; the last one stays, since the model's lineage reads it
-    // (`deleteCheckpointFiles` on the model drops it). The runner mains
-    // register the dir for deletion at JVM exit (TempDirs.deleteOnExit);
-    // a production cluster should point it at scratch storage and clean
-    // per job for the same reason.
+    // silent no-op, r16 verdict #3), EM above DriverFitCap writes its
+    // doc-side block state (the corpus in CSR form plus the doc-topic
+    // counts) to the dir every `checkpointInterval` (10) iterations and
+    // deletes the superseded copy; the last one stays, since the
+    // model's lineage reads it (`deleteCheckpointFiles` on the model
+    // drops it). The runner mains register the dir for deletion at JVM
+    // exit (TempDirs.deleteOnExit); a production cluster should point it
+    // at scratch storage and clean per job for the same reason.
     val lda = new LDA()
       .setK(params.k)
       .setMaxIter(params.maxIterations)
@@ -126,17 +139,50 @@ object LdaPipeline {
       case other =>
         throw new IllegalArgumentException(s"Only em, online are supported but got $other.")
     }
-    // an online fit is one phase: the optimizer submits a couple of
-    // short jobs per iteration (minibatch sample + aggregation), so the
-    // tagged jobs' walls decompose the fit into ~2×maxIter uniform
-    // samples (EM records iterationTimes inside the model instead —
-    // emIterationTimes below)
-    val model = if (online) QueryProfile.phase(spark, OnlineFit)(lda.fit(corpus)) else EmLda.fit(lda, corpus)
+    // above the cap an online fit is one phase: the optimizer submits a
+    // couple of short jobs per iteration (minibatch sample +
+    // aggregation), so the tagged jobs' walls decompose the fit into
+    // ~2×maxIter uniform samples; under it OnlineLda records each
+    // iteration as OnlineIteration (EM records iterationTimes inside the
+    // model instead — emIterationTimes below)
+    val model =
+      if (!online) EmLda.fit(lda, corpus, onDriver)
+      else if (onDriver) OnlineLda.fit(lda, corpus)
+      else QueryProfile.phase(spark, OnlineFit)(lda.fit(corpus))
     Fitted(model, vocab, idf, corpus)
   }
 
+  /** The largest corpus, in nonzero·topic cells (nonzero document-term
+    * entries × k), whose EM or online fit iterates on the driver
+    * ([[EmLda]] with `onDriver`, [[OnlineLda]]); a larger one runs one
+    * Spark job (EM) or two (online) per iteration. Set at the measured
+    * crossover where a driver-side iteration stops being faster than a
+    * distributed one. Measured on ml04/ml06's `documents` corpus, k = 5,
+    * 20 iterations, seed 42, 4-vCPU VM, `SPARK_GRAFT_CPUS=4`, 3 reps
+    * (2 for the sf1 subsets, every 20th doc_id kept in 5, 7 or 9 of
+    * 20); seconds per iteration, driver vs distributed (EM: median of
+    * the model's iteration times; online: fit wall / 20):
+    * {{{
+    * corpus            cells   EM driver  EM distributed  online driver  online distributed
+    * sf0.01          0.058 M   0.0004     0.050-0.071     0.013-0.016    0.142-0.150
+    * sf0.1            0.58 M   0.004      0.054-0.096     0.071-0.081    0.189-0.195
+    * sf1, 5/20 docs   1.48 M                              0.204-0.210    0.275-0.395
+    * sf1, 7/20 docs   2.08 M                              0.272-0.278    0.312-0.420
+    * sf1, 9/20 docs   2.67 M                              0.348-0.365    0.311-0.445
+    * sf1              5.94 M   0.040      0.082-0.115     0.745-0.767    0.418-0.516
+    * }}}
+    * EM on the driver is faster at every size measured; online, whose
+    * driver iteration infers the whole minibatch on one core, crosses
+    * over between 2.08 M and 2.67 M cells, so the one cap is 2 M. On a
+    * box with more cores the distributed side gets faster and the true
+    * crossover lower. */
+  val DriverFitCap: Long = 2000000L
+
   /** The phase an online `lda.fit` runs in. */
   val OnlineFit = "online_fit"
+
+  /** The name under which [[OnlineLda]] records each iteration's wall. */
+  val OnlineIteration = "online_iteration"
 
   /** Per-iteration EM training times (seconds) as recorded in the fitted
     * model (mllib's `iterationTimes`, which [[EmLda]] fills with the

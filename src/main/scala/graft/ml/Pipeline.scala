@@ -46,12 +46,14 @@ object Pipeline {
 
   /** T4 — latest-model pick: explicit timestamp-suffix parse instead of
     * the reference's filesystem-order `.last` (`LDALoader.scala:25-37`,
-    * SURVEY.md §7 risk 2). */
+    * SURVEY.md §7 risk 2). A directory whose last `_` field is not a
+    * timestamp (e.g. `LdaModel_EN_backup`) is not a model and is skipped. */
   def latestModel(dir: String, prefix: String = "LdaModel_"): Option[String] = {
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
     files.filter(f => f.isDirectory && f.getName.startsWith(prefix))
-      .sortBy(f => f.getName.split("_").last.toLong)
-      .lastOption.map(_.getPath)
+      .flatMap(f => f.getName.split("_").last.toLongOption.map(_ -> f))
+      .sortBy(_._1)
+      .lastOption.map(_._2.getPath)
   }
 
   /** The training entry point (`LDATraining` + `LDAClustering.run`):

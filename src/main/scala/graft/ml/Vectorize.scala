@@ -121,6 +121,13 @@ object Vectorize {
   def fitIdf(df: DataFrame, tfCol: String = "tf"): IDFModel =
     new IDF().setMinDocFreq(2).setInputCol(tfCol).setOutputCol("idf_out").fit(df)
 
+  /** The nonzero document-term entries of the count vectors `model` was
+    * fitted on, without a pass over them. `docFreq` counts a term's
+    * documents but reads 0 below minDocFreq (2); every vocabulary term
+    * occurs in some document of the corpus it was built from, so a 0 is
+    * a single-document term. */
+  def nonzeros(model: IDFModel): Long = model.docFreq.iterator.map(math.max(_, 1L)).sum
+
   /** A5 — TF·IDF with the zero-floor quirk: where idf == 0.0 the
     * reference substitutes 0.0001 instead of zeroing the term
     * (`LDAClustering.scala:184-187`), so minDocFreq-filtered terms keep

@@ -217,6 +217,10 @@ class BenchGuardSpec extends AnyFunSuite {
     val online = obs.QueryProfile(Seq("online_fit" -> 3.0),
       Seq("online_fit" -> 0.02, "other" -> 9.0, "online_fit" -> 0.03))
     assert(Bench.iterTimes(online) == Some(Seq(0.02, 0.03)))
+    // an online fit on the driver records its iterations like EM
+    val onDriver = obs.QueryProfile(
+      Seq("online_iteration" -> 0.004, "other" -> 9.0, "online_iteration" -> 0.002), Nil)
+    assert(Bench.iterTimes(onDriver) == Some(Seq(0.004, 0.002)))
     // no series: the spike decision falls back to the wall pin
     assert(Bench.iterTimes(obs.QueryProfile(Seq("corpus_count" -> 1.0), Nil)).isEmpty)
   }

@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.TestSpark
-import org.apache.spark.ml.clustering.{DistributedLDAModel, LDA}
+import org.apache.spark.ml.clustering.{DistributedLDAModel, GraftMlLdaBridge, LDA}
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -102,6 +102,41 @@ class EmLdaSpec extends AnyFunSuite {
       }
   }
 
+  test("the driver path yields the cluster path's model bit for bit, without checkpoints") {
+    val sc = spark.sparkContext
+    val theirs = new LDA().setK(3).setMaxIter(15).setOptimizer("em").setSeed(5L).fit(corpus)
+      .asInstanceOf[DistributedLDAModel]
+    val cluster = EmLda.fit(estimator(3), corpus)
+    val cached = sc.getPersistentRDDs.keySet
+    val before = checkpointDirs()
+    val lda = estimator(3)
+    val ours = EmLda.fit(lda, corpus, onDriver = true)
+
+    assert(checkpointDirs() == before && ours.getCheckpointFiles.isEmpty)
+    assert(ours.topicsMatrix.toArray.toSeq == cluster.topicsMatrix.toArray.toSeq)
+    val diff = maxRelDiff(theirs.topicsMatrix.toArray, ours.topicsMatrix.toArray)
+    assert(diff <= 1e-9, s"topicsMatrix max relative difference $diff")
+    assert(mainTopics(ours) == mainTopics(cluster))
+    // the doc vertices too (trainingLogLikelihood is no model state: mllib
+    // sums it over the graph in task order, so its last ulp varies)
+    def docTopics(m: DistributedLDAModel) = GraftMlLdaBridge.unwrap(m).topicDistributions
+      .collect().sortBy(_._1).map { case (id, v) => id -> v.toArray.toSeq }.toSeq
+    assert(docTopics(ours) == docTopics(cluster))
+    assert(ours.uid == lda.uid && ours.parent == lda)
+    val times = LdaPipeline.emIterationTimes(
+      LdaPipeline.Fitted(ours, Array.empty, Array.empty, corpus))
+    assert(times.exists(t => t.length == 15 && t.forall(_ > 0)), s"iteration times $times")
+
+    // release() drops the graph's RDDs (the fitted corpus here is the
+    // spec's shared one, so an empty frame stands in for it)
+    def added = sc.getPersistentRDDs.filter { case (id, _) => !cached(id) }
+    assert(added.nonEmpty)
+    LdaPipeline.Fitted(ours, Array.empty, Array.empty, spark.emptyDataFrame).release()
+    assert(added.isEmpty, added.values.mkString("; "))
+    assert(GraftMlLdaBridge.unwrap(ours).topicAssignments.count() == 60)
+    LdaPipeline.Fitted(cluster, Array.empty, Array.empty, spark.emptyDataFrame).release()
+  }
+
   test("Fitted.release() drops every RDD an EM fit cached") {
     val tokens = Seq(
       (0L, Seq("cat", "sat", "mat", "cat", "purr")),
@@ -122,9 +157,9 @@ class EmLdaSpec extends AnyFunSuite {
     assert(added.nonEmpty)
     fitted.release()
     assert(added.isEmpty, added.values.mkString("; "))
-    // still usable: the graph's edges recompute from the last kept
-    // checkpoint through the broadcasts its lineage still holds
-    val old = org.apache.spark.ml.clustering.GraftMlLdaBridge.unwrap(model)
+    // still usable: the graph's edges recompute from their lineage (a
+    // corpus this small fits on the driver, so it has no checkpoint)
+    val old = GraftMlLdaBridge.unwrap(model)
     assert(old.topicAssignments.count() == 5)
     assert(LdaPipeline.describeTopics(spark, fitted, 3).count() == 2 && !ll.isNaN)
   }

@@ -244,4 +244,20 @@ class GoldenReportParitySpec extends AnyFunSuite {
     assert(golden != rendered)
     assert(golden.contains("List of Books.") && rendered.contains("List of Books:"))
   }
+
+  test("write encodes the report as UTF-8 whatever the default charset") {
+    val books = Seq(GoldenReport.BookResult(1L, "Faust. Eine Tragödie - Goethe.txt",
+      Seq(0.25, 0.75), 1, 0.75, Seq("Tragödie", "война")))
+    val topics = Seq(GoldenReport.TopicSummary(1, Seq("война" -> 0.5), Seq(books.head.name)))
+    val report = GoldenReport.render(2, books, topics)
+    val path = Files.createTempFile("graft_report", ".txt")
+    try {
+      GoldenReport.write(path.toString, report)
+      val bytes = Files.readAllBytes(path)
+      val read = new String(bytes, StandardCharsets.UTF_8)
+      assert(read.contains("Tragödie") && read.contains("война"),
+        read.linesIterator.filter(_.contains("Trag")).mkString("\n"))
+      assert(java.util.Arrays.equals(bytes, report.getBytes(StandardCharsets.UTF_8)))
+    } finally Files.delete(path)
+  }
 }

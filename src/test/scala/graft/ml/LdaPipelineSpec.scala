@@ -86,6 +86,23 @@ class LdaPipelineSpec extends AnyFunSuite {
     assert(t1 == t2, "pinned seed must reproduce topics")
   }
 
+  test("the fitted IDF gives the corpus size and its nonzero count without a pass") {
+    for (cap <- Seq(1000, 5)) {
+      val vocab = Vectorize.buildVocab(Vectorize.wordCounts(tokens), cap)
+      val tf = Vectorize.countVectors(tokens, vocab)
+      val model = Vectorize.fitIdf(tf)
+      val vecs = tf.select("tf").collect().map(_.getAs[org.apache.spark.ml.linalg.Vector](0))
+      assert(model.numDocs == vecs.length)
+      assert(Vectorize.nonzeros(model) == vecs.map(_.numNonzeros.toLong).sum)
+      // docFreq is the raw document frequency only at or above
+      // minDocFreq (2): a single-document term reads 0
+      val direct = Array.tabulate(vocab.length)(j => vecs.count(_(j) != 0.0).toLong)
+      assert(direct.forall(_ >= 1))
+      assert(model.docFreq.toSeq == direct.map(d => if (d >= 2) d else 0L).toSeq)
+      if (cap == 1000) assert(direct.contains(1L))
+    }
+  }
+
   test("argmax last-wins tie-break (A10 quirk)") {
     import org.apache.spark.ml.linalg.Vectors
     val df = Seq(

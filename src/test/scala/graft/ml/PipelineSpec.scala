@@ -63,4 +63,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.languageDirs("GE") == "German")
     assert(Pipeline.languageDirs.size == 8)
   }
+
+  test("latestModel skips a directory whose suffix is not a timestamp") {
+    val root = java.nio.file.Files.createTempDirectory("graft_models")
+    Seq("LdaModel_EN_1600000000000", "LdaModel_EN_1700000000001", "LdaModel_EN_backup")
+      .foreach(d => java.nio.file.Files.createDirectory(root.resolve(d)))
+    assert(Pipeline.latestModel(root.toString)
+      .contains(root.resolve("LdaModel_EN_1700000000001").toString))
+  }
 }
